@@ -1273,8 +1273,8 @@ object ScaleProbe {
       val idxR = logR.ivfPqIndex
       // exact flat ground truth computed ONCE (Recall.vsFlat would
       // recompute it per operating point — 5 needless 10M scans)
-      val exactTruth = graft.vector.FlatKnn.search(rawLive, recallQs,
-        100, graft.vector.Metric.L2).localCheckpoint(true)
+      val exactTruth = graft.core.PieceLog.matz(graft.vector.FlatKnn.search(
+        rawLive, recallQs, 100, graft.vector.Metric.L2))
       def routedRecall(np: Int, rf: Int): Double =
         graft.vector.Recall.meanAtK(
           graft.vector.IvfPq.searchRefined(idxR, rawLive, recallQs, 100,
@@ -1540,8 +1540,8 @@ object ScaleProbe {
       val idxM = logM.ivfPqIndex
       // its own ground truth (the shared one was freed before the
       // filtered stage; same corpus, so the flat scan re-derives it)
-      val truthM = graft.vector.FlatKnn.search(rawLiveM, recallQs,
-        100, graft.vector.Metric.L2).localCheckpoint(true)
+      val truthM = graft.core.PieceLog.matz(graft.vector.FlatKnn.search(
+        rawLiveM, recallQs, 100, graft.vector.Metric.L2))
       def m16Recall(rf: Int): Double =
         graft.vector.Recall.meanAtK(
           graft.vector.IvfPq.searchRefined(idxM, rawLiveM, recallQs, 100,

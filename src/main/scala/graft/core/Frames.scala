@@ -2,19 +2,20 @@ package graft.core
 
 import org.apache.spark.sql.DataFrame
 
-/** Cached-frame reclamation shared by the incremental logs (BM25Log,
-  * VecLog, PqLog) and the scale probes.
+/** Frame helpers shared across the library.
   *
-  * Durable pieces are `.persist()`ed parquet reads, which the
-  * cache-manager `unpersist` frees. Non-durable pieces and every
-  * marker/df-delta/scratch frame are `localCheckpoint`ed, and
-  * `Dataset.unpersist` is a NO-OP for those — the blocks belong to the
-  * checkpointed RDD, not a cache-manager entry, and only the
-  * ContextCleaner would eventually reclaim them. A long-lived in-memory
-  * store with churn accumulates them (ADVICE r15), so the checkpointed
-  * RDD is unpersisted explicitly here. One shared rule: the next fix to
-  * the freeing logic (a new plan shape, say) lands once, not once per
-  * log. */
+  * [[free]] reclaims the cached frames of the incremental store legs (the
+  * [[PieceLog]] core) and the scale probes. Durable pieces are
+  * `.persist()`ed parquet reads, which the cache-manager `unpersist`
+  * frees. Non-durable pieces and every marker/df-delta/scratch frame are
+  * `localCheckpoint`ed, and `Dataset.unpersist` is a NO-OP for those — the
+  * blocks belong to the checkpointed RDD, not a cache-manager entry, and
+  * only the ContextCleaner would eventually reclaim them. A long-lived
+  * in-memory store with churn accumulates them (ADVICE r15), so the
+  * checkpointed RDD is unpersisted explicitly here.
+  *
+  * [[fanOut]] spreads byte-small, CPU-heavy inputs across every core;
+  * [[balancedUnion]] unions many frames at O(log n) plan depth. */
 object Frames {
   def free(df: DataFrame): Unit = df.queryExecution.logical match {
     case l: org.apache.spark.sql.execution.LogicalRDD =>
@@ -22,15 +23,6 @@ object Frames {
     case _ => df.unpersist(); ()
   }
 
-  /** Union frames by name with a BALANCED tree instead of a left-deep
-    * `reduce(_ unionByName _)`: over thousands of inputs (segment scans,
-    * leg pieces with auto-compaction off) a left-deep fold builds an
-    * O(n)-deep Catalyst tree — quadratic-ish analysis and a potential
-    * driver StackOverflowError on the recursive tree walks — while
-    * pairwise folding yields the SAME single-job plan at O(log n) depth.
-    * Catalyst's CombineUnions flattens either shape into one multi-child
-    * Union, but only AFTER analysis has already recursed the input tree,
-    * so the balance must exist at construction (ADVICE r18 #4). */
   /** Scale-adaptive fan-out for CPU-heavy narrow stages over byte-small
     * inputs: when the input's ESTIMATED bytes would split into fewer scan
     * partitions than the session's parallelism (tiny parquet reads as ONE
@@ -55,6 +47,15 @@ object Frames {
     else df.repartition(dp)
   }
 
+  /** Union frames by name with a BALANCED tree instead of a left-deep
+    * `reduce(_ unionByName _)`: over thousands of inputs (segment scans,
+    * leg pieces with auto-compaction off) a left-deep fold builds an
+    * O(n)-deep Catalyst tree — quadratic-ish analysis and a potential
+    * driver StackOverflowError on the recursive tree walks — while
+    * pairwise folding yields the SAME single-job plan at O(log n) depth.
+    * Catalyst's CombineUnions flattens either shape into one multi-child
+    * Union, but only AFTER analysis has already recursed the input tree,
+    * so the balance must exist at construction (ADVICE r18 #4). */
   def balancedUnion(dfs: Seq[DataFrame]): DataFrame = {
     require(dfs.nonEmpty, "balancedUnion of zero frames")
     var level: IndexedSeq[DataFrame] = dfs.toIndexedSeq

@@ -826,8 +826,16 @@ object Hybrid {
     }
     // 5 slots = the maximum number of concurrent tasks below (config,
     // ivf, meta, text, leg) — leg awaits ivf which awaits config, so a
-    // smaller pool could queue config behind its own dependents
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(5)
+    // smaller pool could queue config behind its own dependents. Daemon
+    // threads, named for thread dumps: a read hung in the filesystem
+    // must not pin the JVM open after the await gives up on it.
+    val threadNo = new java.util.concurrent.atomic.AtomicInteger
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(5,
+      (r: Runnable) => {
+        val t = new Thread(r, s"$ReadThreadPrefix${threadNo.incrementAndGet()}")
+        t.setDaemon(true)
+        t
+      })
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
     def task[T](body: => T): Future[T] = Future {
       localProps.foreach { case (k, v) =>
@@ -835,6 +843,7 @@ object Hybrid {
       body
     }
     val readTimeout = 10.minutes
+    var loaded = false
     try {
     val cfgF = task {
       val c = spark.read.parquet(s"$path/config").head()
@@ -914,11 +923,19 @@ object Hybrid {
         }
       }
     }
-    Persisted(
+    val out = Persisted(
       Await.result(metaF, readTimeout),
       ivf,
       Await.result(textF, readTimeout),
       cfg, Await.result(legF, readTimeout))
-    } finally pool.shutdown()
+    loaded = true
+    out
+    } finally {
+      // on failure the sibling loads are abandoned: interrupt them
+      if (loaded) pool.shutdown() else pool.shutdownNow()
+    }
   }
+
+  /** Name prefix of the threads [[read]] loads an artifact on. */
+  private[graft] val ReadThreadPrefix = "graft-hybrid-read-"
 }

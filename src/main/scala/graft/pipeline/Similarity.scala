@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import graft.expr.Distances
-import graft.vector.{FlatKnn, Metric}
+import graft.vector.FlatKnn
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -16,10 +16,6 @@ import org.apache.spark.sql.functions._
   * path — cluster-pruned instead of hash-bucketed.)
   */
 object Similarity {
-
-  /** Exact cosine top-k (brute force baseline). */
-  def bruteForceCosine(data: DataFrame, queries: DataFrame, k: Int): DataFrame =
-    FlatKnn.search(data, queries, k, Metric.Cosine)
 
   /** Deterministic hyperplanes from a CLOSED-FORM hash — not a JVM RNG
     * stream — so the whole LSH pipeline (plane values → sign signatures →

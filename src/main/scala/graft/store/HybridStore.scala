@@ -1,8 +1,10 @@
 package graft.store
 
+import graft.core.StoreLeg
 import graft.filter.FilterGroup
 import graft.hybrid.Hybrid
 import graft.text.{BM25Corpus, BM25Log, Tokenize}
+import graft.vector.{HnswLog, PqLog, VecLog}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -180,15 +182,44 @@ final class HybridStore(spark: SparkSession, root: String,
     try { ensureOpen(op); f } finally lifecycle.readLock().unlock()
   }
 
-  // incrementally maintained text state — seeded at the first text
-  // search, then updated per mutation at batch cost (never rebuilt)
-  @volatile private var textLog: Option[BM25Log] = None
-  // incremental vector state (only when incrementalIvf is configured)
-  @volatile private var vecLog: Option[graft.vector.VecLog] = None
-  // incremental HNSW graph state (only when incrementalHnsw is configured)
-  @volatile private var hnswLog: Option[graft.vector.HnswLog] = None
-  // incremental PQ-coded state (only when incrementalPq is configured)
-  @volatile private var pqLog: Option[graft.vector.PqLog] = None
+  // incrementally maintained derived state — the text log and at most
+  // one incremental vector log, each attached at the first read that
+  // sees its column, then updated per mutation at batch cost (never
+  // rebuilt). Every mutation path fans out over this one list.
+  @volatile private var legs: Vector[StoreLeg] = Vector.empty
+
+  private def attached[L <: StoreLeg: scala.reflect.ClassTag]: Option[L] =
+    legs.collectFirst { case l: L => l }
+
+  /** The attached leg of type `L`, attaching `seed` on first use. */
+  private def attach[L <: StoreLeg: scala.reflect.ClassTag](seed: => L): L =
+    attached[L].getOrElse { val l = seed; legs :+= l; l }
+
+  /** Fold a just-written segment into every attached leg — reading the
+    * segment parquet back (cached, lineage-free) rather than
+    * re-evaluating the caller's plan. Call under `mutex`. */
+  private def fold(seg: Long): Unit = {
+    val verdict = livenessVerdict(store.segment(seg).select(col("id")), seg)
+    legs.foreach(_.append(store.segment(seg), seg, verdict))
+    invalidate()
+  }
+
+  /** Fan a tombstone write out to every attached leg. Call under `mutex`. */
+  private def foldDelete(ids: DataFrame): Unit = {
+    val upto = store.segments().lastOption.getOrElse(-1L)
+    val verdict = livenessVerdict(ids, excludeSeg = -1L)
+    legs.foreach(_.delete(ids, upto, verdict))
+    invalidate()
+  }
+
+  /** Segment `n`'s `id` (as long) plus column `c` when it has one — the
+    * per-segment frame every leg's reopen reads. */
+  private def segColumn(c: String)(n: Long): DataFrame = {
+    val f = store.segment(n)
+    if (f.columns.contains(c))
+      f.select(col("id").cast("long").as("id"), col(c))
+    else f.select(col("id").cast("long").as("id"))
+  }
 
   private def invalidate(): Unit = mutex.synchronized {
     state.foreach { case (live, _, _, _) => live.unpersist() }
@@ -210,9 +241,10 @@ final class HybridStore(spark: SparkSession, root: String,
     *     leg may write a marker that masks nothing — harmless (markers
     *     only act on matching piece rows from segments <= upto) and
     *     bounded by the mutation batch.
-    *   - `None` when no leg would consume a shared verdict (only the
-    *     text log attached, whose one probe job is also its stats
-    *     delta and runs regardless of a true verdict) — the legs then
+    *   - `None` when no leg would consume a shared verdict
+    *     ([[StoreLeg.wantsVerdict]]: e.g. only the text log attached,
+    *     whose one probe job is also its stats delta and runs
+    *     regardless of a true verdict) — the legs then
     *     keep their own probes, so a single-leg store never pays an
     *     EXTRA job for the sharing machinery.
     *
@@ -252,7 +284,7 @@ final class HybridStore(spark: SparkSession, root: String,
 
   private def livenessVerdict(ids: => DataFrame,
                               excludeSeg: Long): Option[Boolean] = {
-    if (vecLog.isEmpty && pqLog.isEmpty) return None
+    if (!legs.exists(_.wantsVerdict)) return None
     val segs = store.segments().filterNot(_ == excludeSeg)
     if (segs.isEmpty) return Some(false)
     livenessProbeCount += 1
@@ -309,7 +341,7 @@ final class HybridStore(spark: SparkSession, root: String,
         def probe(ns: Seq[Long]): Boolean = {
           livenessProbePlans += 1
           livenessSegmentsProbed += ns.size
-          SegmentStore.balancedUnion(ns.map(n => store.segment(n)
+          graft.core.Frames.balancedUnion(ns.map(n => store.segment(n)
               .select(col("id").cast("long").as("id"))))
             .join(idsNorm, Seq("id"), "left_semi")
             .limit(1).count() > 0
@@ -338,16 +370,7 @@ final class HybridStore(spark: SparkSession, root: String,
     // serializes mutations among themselves WITHOUT blocking concurrent
     // searches (see the protocol note above).
     val seg = store.append(docs)
-    // fold the new segment into the derived logs at BATCH cost — reading
-    // the just-written segment parquet back (cached, lineage-free) rather
-    // than re-evaluating the caller's plan
-    val verdict =
-      livenessVerdict(store.segment(seg).select(col("id")), seg)
-    textLog.foreach(_.append(store.segment(seg), seg, verdict))
-    vecLog.foreach(_.append(store.segment(seg), seg, verdict))
-    hnswLog.foreach(_.append(store.segment(seg), seg))
-    pqLog.foreach(_.append(store.segment(seg), seg, verdict))
-    invalidate()
+    fold(seg)
     // both locks are reentrant, so the nested compact() re-enters cleanly
     maybeCompact()
     seg
@@ -358,15 +381,8 @@ final class HybridStore(spark: SparkSession, root: String,
   def delete(ids: Seq[Long]): Unit =
       sharedOp("delete") { mutex.synchronized {
     store.delete(ids)
-    val upto = store.segments().lastOption.getOrElse(-1L)
     import spark.implicits._
-    lazy val frame = ids.toDF("id")
-    val verdict = livenessVerdict(frame, excludeSeg = -1L)
-    textLog.foreach(_.delete(frame, upto, verdict))
-    vecLog.foreach(_.delete(frame, upto, verdict))
-    hnswLog.foreach(_.delete(ids))
-    pqLog.foreach(_.delete(frame, upto, verdict))
-    invalidate()
+    foldDelete(ids.toDF("id"))
   } }
 
   def deleteFrom(ids: DataFrame): Unit =
@@ -385,15 +401,7 @@ final class HybridStore(spark: SparkSession, root: String,
     try {
       idsN.count() // pin the snapshot before anything consumes it
       store.deleteFrom(idsN)
-      val upto = store.segments().lastOption.getOrElse(-1L)
-      val verdict = livenessVerdict(idsN, excludeSeg = -1L)
-      textLog.foreach(_.delete(idsN, upto, verdict))
-      vecLog.foreach(_.delete(idsN, upto, verdict))
-      // bounded by the mutation batch, not the corpus (the graph API
-      // takes explicit ids, like the reference's Remove)
-      hnswLog.foreach(_.delete(idsN.collect().map(_.getLong(0)).toSeq))
-      pqLog.foreach(_.delete(idsN, upto, verdict))
-      invalidate()
+      foldDelete(idsN)
     } finally { idsN.unpersist(); () }
   } }
 
@@ -426,19 +434,9 @@ final class HybridStore(spark: SparkSession, root: String,
       f
       split += leg -> (System.nanoTime() - t) / 1e9
     }
-    textLog.foreach(l => timed("text")(l.collapse(s)))
-    vecLog.foreach(l => timed("vec")(l.collapse(s)))
-    hnswLog.foreach(l => timed("hnsw")(l.collapse(s)))
-    pqLog.foreach(l => timed("pq")(l.collapse(s)))
-    // persist the freshly collapsed graph HERE, not only at close():
-    // compaction is already paying an O(live) rewrite, so the graph
-    // dump rides along and bounds crash recovery to
-    // replay-since-last-compaction instead of a full re-seed (a crash
-    // before the next close would otherwise discard every fold since
-    // the previous process's close)
-    if (incrementalHnsw.exists(_.persist))
-      hnswLog.foreach(l => timed("hnsw_persist")(
-        l.persistTo(spark, s"$root/_hnsw")))
+    // (a persisted HNSW graph is also written in its collapse, riding
+    // the O(live) rewrite the compaction already pays)
+    legs.foreach(l => timed(l.name)(l.collapse(s)))
     lastCompactSecs = split.toMap
     invalidate()
     s
@@ -480,123 +478,14 @@ final class HybridStore(spark: SparkSession, root: String,
         val segsAtRead = store.segments()
         val live = store.read().persist()
         val cols = live.columns.toSet
+        // seed each incremental log once; afterwards
+        // append/delete/compact maintain it at batch cost. With
+        // persistence on, segments whose pieces were written by a
+        // previous process load WITHOUT re-tokenization or re-encoding
         val corpus =
-          if (cols("text")) {
-            // seed the incremental log once; afterwards
-            // append/delete/compact maintain it at batch cost. With
-            // persistence on, segments whose pieces were written by a
-            // previous process load WITHOUT re-tokenization
-            if (textLog.isEmpty) textLog = Some(seedLog(live))
-            textLog.map(_.corpus)
-          } else None
+          if (cols("text")) Some(attach(seedLog(live)).corpus) else None
         val leg =
-          if (cols("vector")) incrementalHnsw match {
-            case Some(spec) =>
-              // load the persisted graph + replay post-close mutations
-              // when an artifact exists (persist=true stores write one at
-              // close); otherwise seed ONCE per process from the live
-              // view, routed shards. Afterwards every mutation folds
-              // copy-on-write.
-              if (hnswLog.isEmpty) {
-                // the folded horizon must be listed BEFORE the live view
-                // resolved above: a concurrent append can land a segment
-                // between the two, and stamping it folded while the
-                // graph was built without its vectors would silently
-                // lose it (the late fold would no-op). Listing FIRST
-                // errs the safe way — the graph may already contain the
-                // newer segment's vectors, and its writer's fold then
-                // re-adds them as in-place replacements.
-                val segs = segsAtRead
-                def segVec(n: Long) = {
-                  val f = store.segment(n)
-                  if (f.columns.contains("vector"))
-                    f.select(col("id").cast("long").as("id"), col("vector"))
-                  else f.select(col("id").cast("long").as("id"))
-                }
-                def liveVec =
-                  live.filter(col("vector").isNotNull).select("id", "vector")
-                hnswLog = Some(
-                  if (spec.persist)
-                    graft.vector.HnswLog.reopen(spark, s"$root/_hnsw",
-                      segs, segVec, deadVectorIds(segs), liveVec,
-                      nShards = spark.sparkContext.defaultParallelism,
-                      m = spec.m, efConstruction = spec.efConstruction,
-                      metric = cfg.metric)
-                  else graft.vector.HnswLog.seed(liveVec, segs,
-                    nShards = spark.sparkContext.defaultParallelism,
-                    m = spec.m, efConstruction = spec.efConstruction,
-                    metric = cfg.metric))
-                // bound crash recovery for long-streaming stores that
-                // never hit a compaction trigger: the graph also dumps
-                // every 16th fold, riding the checkpoint cadence
-                if (spec.persist)
-                  hnswLog.foreach(_.enableAutoPersist(spark, s"$root/_hnsw"))
-              }
-              Some(Hybrid.HnswLeg(hnswLog.get.index, spec.efSearch))
-            case None => incrementalIvf match {
-            case Some((nlist, nprobe)) =>
-              // train-once + assign-only maintenance; the model persists
-              // with the pieces, so a reopened store never retrains
-              if (vecLog.isEmpty)
-                vecLog = Some(graft.vector.VecLog.reopen(spark,
-                  s"$root/_vec", store.segments(),
-                  n => {
-                    val f = store.segment(n)
-                    if (f.columns.contains("vector"))
-                      f.select(col("id").cast("long").as("id"), col("vector"))
-                    else f.select(col("id").cast("long").as("id"))
-                  },
-                  reopenMarkers(store.segments()),
-                  live.filter(col("vector").isNotNull).select("id", "vector"),
-                  nlist,
-                  // the leg trains (and assigns every piece) in the
-                  // store's configured metric space — without this a
-                  // cosine-configured store would silently serve L2
-                  // centroids over unnormalized vectors (degraded
-                  // recall, no error)
-                  metric = cfg.metric, opq = ivfOpq))
-              Some(Hybrid.IvfLeg(vecLog.get.index, nprobe))
-            case None => incrementalPq match {
-            case Some(spec) =>
-              // train-once codebooks + encode-only maintenance; model
-              // and pieces persist under root/_pq, so a reopened store
-              // never retrains (and the reopen guard matrix throws on
-              // metric/OPQ codebook-state mismatch)
-              if (pqLog.isEmpty)
-                pqLog = Some(graft.vector.PqLog.reopen(spark,
-                  s"$root/_pq", store.segments(),
-                  n => {
-                    val f = store.segment(n)
-                    if (f.columns.contains("vector"))
-                      f.select(col("id").cast("long").as("id"), col("vector"))
-                    else f.select(col("id").cast("long").as("id"))
-                  },
-                  reopenMarkers(store.segments()),
-                  live.filter(col("vector").isNotNull).select("id", "vector"),
-                  m = spec.m, ksub = spec.ksub, maxIter = spec.maxIter,
-                  metric = cfg.metric, opq = spec.opq,
-                  nlist = spec.nlist))
-              // refine reads raw vectors from the LIVE view — the
-              // vectors the codes were built from stay in the segment
-              // parquet (compression at rest; the refine join is
-              // broadcast-semi-join-pruned to q·k·refineFactor rows)
-              val raw =
-                live.filter(col("vector").isNotNull).select("id", "vector")
-              if (spec.nlist > 0)
-                // routed: probed-list residual ADC + refine — the
-                // per-query scan touches nprobe/nlist of the codes
-                Some(Hybrid.IvfPqRefinedLeg(pqLog.get.ivfPqIndex, raw,
-                  spec.refineFactor, spec.nprobe))
-              else
-                Some(Hybrid.PqRefinedLeg(pqLog.get.liveCodes,
-                  pqLog.get.model, raw, spec.refineFactor))
-            case None =>
-              Some(vectorIndexer(
-                live.filter(col("vector").isNotNull).select("id", "vector")))
-          }
-          }
-          }
-          else None
+          if (cols("vector")) Some(vectorLeg(live, segsAtRead)) else None
         val metaCols = live.columns.filter(c => c != "vector" && c != "text")
         val s = (live, corpus, leg,
           live.select(metaCols.toIndexedSeq.map(col): _*))
@@ -611,17 +500,85 @@ final class HybridStore(spark: SparkSession, root: String,
   private def seedLog(live: DataFrame): BM25Log =
     if (persistDerivedText) {
       val segs = store.segments()
-      BM25Log.reopen(spark, s"$root/_text", segs,
-        n => {
-          val f = store.segment(n)
-          if (f.columns.contains("text"))
-            f.select(col("id").cast("long").as("id"), col("text"))
-          else f.select(col("id").cast("long").as("id"))
-        },
+      BM25Log.reopen(spark, s"$root/_text", segs, segColumn("text"),
         reopenMarkers(segs), tokenizer)
     } else BM25Log.fromLive(
       live.filter(col("text").isNotNull).select("id", "text"),
       store.segments().lastOption.getOrElse(0L), tokenizer)
+
+  /** This generation's vector leg: the configured incremental log
+    * (attached on first use), else `vectorIndexer` over the live vectors.
+    * `segsAtRead` is the segment horizon listed BEFORE `live` resolved. */
+  private def vectorLeg(live: DataFrame,
+                        segsAtRead: Seq[Long]): Hybrid.VectorLeg = {
+    def liveVec = live.filter(col("vector").isNotNull).select("id", "vector")
+    (incrementalHnsw, incrementalIvf, incrementalPq) match {
+      case (Some(spec), _, _) =>
+        // load the persisted graph + replay post-close mutations when an
+        // artifact exists (persist=true stores write one at compact and
+        // close); otherwise seed ONCE per process from the live view,
+        // routed shards. Afterwards every mutation folds copy-on-write.
+        //
+        // The folded horizon must be listed BEFORE the live view: a
+        // concurrent append can land a segment between the two, and
+        // stamping it folded while the graph was built without its
+        // vectors would silently lose it (the late fold would no-op).
+        // Listing FIRST errs the safe way — the graph may already
+        // contain the newer segment's vectors, and its writer's fold
+        // then re-adds them as in-place replacements.
+        val log = attach {
+          val segs = segsAtRead
+          val nShards = spark.sparkContext.defaultParallelism
+          val l =
+            if (spec.persist)
+              HnswLog.reopen(spark, s"$root/_hnsw", segs,
+                segColumn("vector"), deadVectorIds(segs), liveVec, nShards,
+                m = spec.m, efConstruction = spec.efConstruction,
+                metric = cfg.metric)
+            else HnswLog.seed(liveVec, segs, nShards, m = spec.m,
+              efConstruction = spec.efConstruction, metric = cfg.metric)
+          // persistence also bounds crash recovery for long-streaming
+          // stores that never hit a compaction trigger: the graph dumps
+          // every 16th fold, riding the checkpoint cadence
+          if (spec.persist) l.enableAutoPersist(spark, s"$root/_hnsw")
+          l
+        }
+        Hybrid.HnswLeg(log.index, spec.efSearch)
+      case (_, Some((nlist, nprobe)), _) =>
+        // train-once + assign-only maintenance; the model persists with
+        // the pieces, so a reopened store never retrains. The leg trains
+        // (and assigns every piece) in the store's configured metric
+        // space — without this a cosine-configured store would silently
+        // serve L2 centroids over unnormalized vectors
+        val log = attach(VecLog.reopen(spark, s"$root/_vec",
+          store.segments(), segColumn("vector"),
+          reopenMarkers(store.segments()), liveVec, nlist,
+          metric = cfg.metric, opq = ivfOpq))
+        Hybrid.IvfLeg(log.index, nprobe)
+      case (_, _, Some(spec)) =>
+        // train-once codebooks + encode-only maintenance; model and
+        // pieces persist under root/_pq (and the reopen guard matrix
+        // throws on metric/OPQ/routing codebook-state mismatch)
+        val log = attach(PqLog.reopen(spark, s"$root/_pq",
+          store.segments(), segColumn("vector"),
+          reopenMarkers(store.segments()), liveVec,
+          m = spec.m, ksub = spec.ksub, maxIter = spec.maxIter,
+          metric = cfg.metric, opq = spec.opq, nlist = spec.nlist))
+        // refine reads raw vectors from the LIVE view — the vectors the
+        // codes were built from stay in the segment parquet (compression
+        // at rest; the refine join is broadcast-semi-join-pruned to
+        // q·k·refineFactor rows)
+        if (spec.nlist > 0)
+          // routed: probed-list residual ADC + refine — the per-query
+          // scan touches nprobe/nlist of the codes
+          Hybrid.IvfPqRefinedLeg(log.ivfPqIndex, liveVec,
+            spec.refineFactor, spec.nprobe)
+        else
+          Hybrid.PqRefinedLeg(log.liveCodes, log.model, liveVec,
+            spec.refineFactor)
+      case _ => vectorIndexer(liveVec)
+    }
+  }
 
   /** The newest-wins/tombstone mask REDERIVED from store metadata for a
     * reopened log: only ids with more than one instance or a tombstone
@@ -630,7 +587,7 @@ final class HybridStore(spark: SparkSession, root: String,
   private def reopenMarkers(segs: Seq[Long]): Option[DataFrame] = {
     val tomb = store.tombstones()
     if (segs.size <= 1 && tomb.isEmpty) return None
-    val winners = SegmentStore.balancedUnion(segs.map(n => store.segment(n)
+    val winners = graft.core.Frames.balancedUnion(segs.map(n => store.segment(n)
         .select(col("id").cast("long").as("id")).withColumn("_s", lit(n))))
       .groupBy(col("id"))
       .agg(max(col("_s")).as("win"), count(lit(1)).as("c"))
@@ -656,7 +613,7 @@ final class HybridStore(spark: SparkSession, root: String,
       case None => Seq.empty
       case Some(t) =>
         if (segs.isEmpty) Seq.empty
-        else SegmentStore.balancedUnion(segs.map(n => store.segment(n)
+        else graft.core.Frames.balancedUnion(segs.map(n => store.segment(n)
             .select(col("id").cast("long").as("id"))
             // only tombstoned ids can be dead — semi-join each segment's
             // id column BEFORE the union so the winner aggregation is
@@ -676,7 +633,7 @@ final class HybridStore(spark: SparkSession, root: String,
     * until a text search has seeded the log). For callers composing
     * custom text plans against the store's state. */
   def textCorpus: Option[BM25Corpus] =
-    mutex.synchronized { textLog.map(_.corpus) }
+    mutex.synchronized { attached[BM25Log].map(_.corpus) }
 
   /** Embedded single-box serving of the CURRENT generation: collects the
     * live metadata/vectors/corpus into an in-process
@@ -769,32 +726,33 @@ final class HybridStore(spark: SparkSession, root: String,
   // observability for specs/probes: how many materialized postings pieces
   // the log currently carries (1 after seed/collapse, +1 per text append)
   private[graft] def textLogPieces: Int =
-    mutex.synchronized { textLog.map(_.pieceCount).getOrElse(0) }
+    mutex.synchronized { attached[BM25Log].map(_.pieceCount).getOrElse(0) }
 
   private[graft] def vecLogPieces: Int =
-    mutex.synchronized { vecLog.map(_.pieceCount).getOrElse(0) }
+    mutex.synchronized { attached[VecLog].map(_.pieceCount).getOrElse(0) }
 
   // the incremental PQ log, once seeded (probes measure recall/serving
   // through the same index object the facade serves from)
-  private[graft] def pqLogHandle: Option[graft.vector.PqLog] =
-    mutex.synchronized { pqLog }
+  private[graft] def pqLogHandle: Option[PqLog] =
+    mutex.synchronized { attached[PqLog] }
 
   // marker-table row counts across the df-marker legs (append-only
   // histories keep all three at zero — the shared-probe contract)
   private[graft] def legMarkerRows: Map[String, Long] = mutex.synchronized {
-    Map("text" -> textLog.map(_.markerRows).getOrElse(0L),
-        "vec"  -> vecLog.map(_.markerRows).getOrElse(0L),
-        "pq"   -> pqLog.map(_.markerRows).getOrElse(0L))
+    Map("text" -> 0L, "vec" -> 0L, "pq" -> 0L) ++
+      legs.collect { case l: graft.core.PieceLog => l.name -> l.markerRows }
   }
 
   private[graft] def hnswLogFolded: Int =
-    mutex.synchronized { hnswLog.map(_.foldedCount).getOrElse(0) }
+    mutex.synchronized { attached[HnswLog].map(_.foldedCount).getOrElse(0) }
 
   private[graft] def hnswLogLoaded: Boolean =
-    mutex.synchronized { hnswLog.exists(_.loadedFromArtifact) }
+    mutex.synchronized { attached[HnswLog].exists(_.loadedFromArtifact) }
 
   private[graft] def hnswAutoPersistSecs: Seq[Double] =
-    mutex.synchronized { hnswLog.map(_.autoPersistSecs).getOrElse(Vector.empty) }
+    mutex.synchronized {
+      attached[HnswLog].map(_.autoPersistSecs).getOrElse(Vector.empty)
+    }
 
   /** True when this store's HNSW leg discarded a persisted artifact over
     * a metric mismatch and paid a full re-seed — a store-level signal
@@ -802,7 +760,7 @@ final class HybridStore(spark: SparkSession, root: String,
     * MISCONFIGURED store until a persist overwrites the artifact;
     * process-wide tally in [[graft.vector.HnswLog.metricReseeds]]. */
   def hnswMetricReseeded: Boolean =
-    mutex.synchronized { hnswLog.exists(_.reseededForMetric) }
+    mutex.synchronized { attached[HnswLog].exists(_.reseededForMetric) }
 
   /** Hybrid Execute over the live view — filters against the metadata
     * columns, vector/text legs against the stored modalities, fused per
@@ -912,16 +870,9 @@ final class HybridStore(spark: SparkSession, root: String,
           // thread must never interleave with a batch around the lock
           // release (and concurrent searches stay unblocked — mutex)
           if (b.count() > 0) sharedOp("sink batch") { mutex.synchronized {
-            val seg = store.append(b)
             // incremental folds (only once a search has seeded the
             // logs) — per-batch cost stays bounded by the batch
-            val verdict =
-              livenessVerdict(store.segment(seg).select(col("id")), seg)
-            textLog.foreach(_.append(store.segment(seg), seg, verdict))
-            vecLog.foreach(_.append(store.segment(seg), seg, verdict))
-            hnswLog.foreach(_.append(store.segment(seg), seg))
-            pqLog.foreach(_.append(store.segment(seg), seg, verdict))
-            invalidate()
+            fold(store.append(b))
           } }
         } finally { b.unpersist(); () }
       }
@@ -955,38 +906,23 @@ final class HybridStore(spark: SparkSession, root: String,
         s"store at $root is already closed (CloseTwice contract, " +
           "storage_test.go:420-443)")
       closed = true
-      // EVERY step runs even when an earlier one throws (ADVICE r16 #3:
-      // a throwing text-log release used to skip the later legs'
-      // releases AND the graph persist, leaking their checkpointed
-      // blocks forever — closed is already latched, so no retry can
-      // ever reach them). The first failure rethrows with the rest
-      // suppressed; the writer LOCK is freed by the last step
-      // regardless (a held lock would brick the store for every future
-      // opener).
-      // a WRITER close also vacuums the legs' collapse-superseded piece
-      // dirs (the one-cycle deferral's close-time counterpart, ADVICE
-      // r18 #5 — SegmentStore.close already vacuums retired SEGMENTS;
-      // without the leg twin a store closed after one compaction leaks
-      // a generation of piece dirs until some future compact). Readers
-      // never delete shared bytes — same owner-only contract.
+      // EVERY leg's release runs even when an earlier one throws: closed
+      // is already latched, so no retry could reach a skipped leg's
+      // checkpointed blocks (or its graph persist). The first failure
+      // rethrows with the rest suppressed; the writer LOCK is freed
+      // last regardless (a held lock would brick the store for every
+      // future opener). A WRITER close also vacuums the legs'
+      // collapse-superseded piece dirs, as SegmentStore.close vacuums
+      // retired segments; readers never delete shared bytes.
       val vac = store.isWriter
-      val steps = scala.collection.mutable.ArrayBuffer[(String, () => Unit)](
-        "text release" -> (() => { textLog.foreach(_.release(vac)); textLog = None }),
-        "vec release" -> (() => { vecLog.foreach(_.release(vac)); vecLog = None }),
-        "pq release" -> (() => { pqLog.foreach(_.release(vac)); pqLog = None }))
-      // durable HNSW graph: a mutated log writes its artifact so the
-      // next process loads + replays instead of re-running the seed
-      // build (no-op when clean or persistence is off)
-      if (incrementalHnsw.exists(_.persist))
-        steps += "hnsw persist" ->
-          (() => hnswLog.foreach(_.persistTo(spark, s"$root/_hnsw")))
-      steps += "hnsw release" ->
-        (() => { hnswLog.foreach(_.release()); hnswLog = None })
+      val steps = legs.map(l =>
+        s"${l.name} release" -> (() => l.release(vac)))
+      legs = Vector.empty
       // the writer LOCK must be freed for EVERY throwable, fatal ones
       // included (runAllSteps deliberately lets an InterruptedException
       // fly immediately — but closed is latched, so without this finally
       // a cancellation mid-release would hold the on-disk LOCK forever)
-      try HybridStore.runAllSteps(steps.toSeq)
+      try HybridStore.runAllSteps(steps)
       finally { try invalidate() finally store.close() }
     } finally lifecycle.writeLock().unlock()
   }

@@ -487,7 +487,7 @@ final class SegmentStore(spark: SparkSession, root: String,
         missing.partition(n => segment(n).columns.contains("id"))
       idLess.foreach(n => rangeCache.put(n, None))
       if (withId.nonEmpty) {
-        val rows = SegmentStore.balancedUnion(withId.map(n => segment(n)
+        val rows = graft.core.Frames.balancedUnion(withId.map(n => segment(n)
             .select(col("id").cast("long").as("id"))
             .withColumn("_s", lit(n))))
           .groupBy(col("_s"))
@@ -532,8 +532,7 @@ final class SegmentStore(spark: SparkSession, root: String,
       }
       .map(_.getPath.toString).toVector
     if (live.isEmpty) None
-    else Some(spark.read.parquet(live: _*)
-      .groupBy(col("id")).agg(max(col("upto")).as("upto")))
+    else Some(graft.core.PieceLog.foldMarkers(spark.read.parquet(live: _*)))
   }
 
   /** Read the live view: union of segments, newest-wins per id, minus
@@ -553,7 +552,7 @@ final class SegmentStore(spark: SparkSession, root: String,
     val latest =
       if (segs.size == 1) segment(segs.head).withColumn("_seg", lit(segs.head))
       else {
-        val unioned = SegmentStore.balancedUnion(segs.map { n =>
+        val unioned = graft.core.Frames.balancedUnion(segs.map { n =>
           segment(n).withColumn("_seg", lit(n))
         })
         val payload = unioned.columns.filter(c => c != "id" && c != "_seg").toIndexedSeq
@@ -636,11 +635,6 @@ final class SegmentStore(spark: SparkSession, root: String,
 
 object SegmentStore {
   final case class SegmentStats(seg: Long, files: Long, bytes: Long)
-
-  /** Balanced (O(log n) depth) unionByName over many segment scans —
-    * see [[graft.core.Frames.balancedUnion]] (ADVICE r18 #4). */
-  def balancedUnion(dfs: Seq[DataFrame]): DataFrame =
-    graft.core.Frames.balancedUnion(dfs)
 
   /** Open a store as THE writer: acquires the root's LOCK file atomically,
     * failing if another open writer holds it (storage_provider.go:36-64,

@@ -79,10 +79,18 @@ final case class BM25Corpus(
   def scoreTerms(terms: Seq[String],
                  candidates: Option[DataFrame] = None): DataFrame = {
     val ts = terms.distinct
-    // empty query => no matching postings => empty result, same as the
-    // empty-terms join (bm25_index_search.go:279-281)
-    val in = if (ts.isEmpty) lit(false) else col("term").isin(ts: _*)
-    scoreOn(postings.filter(in), termDf.filter(in), candidates)
+    if (ts.size > MaxLiteralTerms) {
+      // a document-sized query would inline thousands of literals into
+      // the plan; past the bound the broadcast-join path scales instead
+      val s = postings.sparkSession
+      import s.implicits._
+      score(ts.toDF("term"), candidates, termsDistinct = true)
+    } else {
+      // empty query => no matching postings => empty result, same as the
+      // empty-terms join (bm25_index_search.go:279-281)
+      val in = if (ts.isEmpty) lit(false) else col("term").isin(ts: _*)
+      scoreOn(postings.filter(in), termDf.filter(in), candidates)
+    }
   }
 
   private def scoreOn(base0: DataFrame, tinfo: DataFrame,
@@ -125,6 +133,10 @@ final case class BM25Corpus(
 object BM25 {
   val K1 = 1.2
   val B = 0.75
+
+  /** Most distinct query terms [[BM25Corpus.scoreTerms]] states as a
+    * literal `IN` list; longer queries take the broadcast-join path. */
+  val MaxLiteralTerms = 256
 
   /** Per-(term, doc) BM25 contribution; all inputs double. */
   def bm25Term(tf: Column, df: Column, dl: Column,

@@ -1,5 +1,8 @@
 package graft.text
 
+import graft.core.Frames.free
+import graft.core.PieceLog
+import graft.core.PieceLog.matz
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -11,15 +14,11 @@ import org.apache.spark.sql.functions._
   *
   * A monolithic [[BM25.build]] per mutation costs a full-corpus tokenize +
   * two corpus-wide shuffles — at 100 TB that makes every 1-row append pay
-  * for the whole store. This class instead mirrors the segment store's own
-  * LSM shape:
+  * for the whole store. This log instead keeps one tokenized
+  * postings/doc-lens PIECE per appended segment under the shared
+  * [[graft.core.PieceLog]] protocol (newest-wins markers, collapse,
+  * durable pieces under `persistDir/seg=N/{postings,lens}`), plus:
   *
-  *   - one materialized postings/doc-lens PIECE per appended segment
-  *     (tokenized once, at append time, at batch cost);
-  *   - a newest-wins MARKER table `(id, upto)`: a piece row is live iff
-  *     its segment id is greater than the id's marker — exactly
-  *     [[graft.store.SegmentStore.read]]'s delete-marker ordering, so a
-  *     re-appended id resurrects in its newer segment;
   *   - per-term df maintained by DELTA: each mutation appends a signed
   *     batch-vocabulary-sized delta frame, folded into the base table
   *     lazily at the next [[corpus]] access (the relational re-expression
@@ -28,35 +27,51 @@ import org.apache.spark.sql.functions._
   *   - n_docs / Σdl as driver scalars, updated arithmetically (dl values
   *     are integer-valued doubles, so the running sum is EXACT in any
   *     order and `avgdl = Σdl / n` is bit-identical to any other
-  *     evaluation order).
+  *     evaluation order);
+  *   - a `_tok` commit record per piece naming the tokenizer that cut it
+  *     (see [[BM25Log.reopen]]).
   *
   * Per-mutation cost: tokenize + materialize the BATCH, one overlap probe
-  * against the live doc-lens view (a columnar scan with a semi-join, no
-  * shuffle — only when the batch's ids might replace live docs does the
-  * postings view get probed), and O(batch vocabulary) delta frames.
-  * Nothing corpus-sized is rewritten; [[corpus]] serves lazy views over
-  * the materialized pieces.
-  *
-  * Materialization uses `localCheckpoint(eager = true)`: lineage is
-  * truncated (a thousand-append log does not accumulate a thousand-deep
-  * plan) and blocks live on executors, reclaimed by the context cleaner
-  * once a generation is dropped. On a multi-tenant cluster where executor
-  * loss must not lose the derived state, swap in reliable checkpointing or
-  * rebuild from the (always durable) segment parquet via
-  * [[BM25Log.fromLive]] — the store itself is the source of truth, this
-  * log is a cache.
+  * against the live doc-lens view (only when the batch's ids might
+  * replace live docs does the postings view get probed), and
+  * O(batch vocabulary) delta frames. Nothing corpus-sized is rewritten;
+  * [[corpus]] serves lazy views over the materialized pieces. The store
+  * itself is the source of truth, this log is a cache ([[BM25Log.fromLive]]
+  * rebuilds it).
   *
   * NOT thread-safe; guard with the owning store's generation lock (as
   * [[graft.store.HybridStore]] does).
   */
 final class BM25Log(spark: SparkSession,
                     val tokenizer: Tokenize.Tokenizer = Tokenize.Simple,
-                    persistDir: Option[String] = None) {
+                    persistDir: Option[String] = None)
+    extends PieceLog(spark, persistDir) {
 
-  // (segment id, postings(term,id,tf,dl), docLens(id,dl)) — materialized
-  private var pieces: Vector[(Long, DataFrame, DataFrame)] = Vector.empty
-  // (id, upto): masks piece rows with seg <= upto — materialized
-  private var markers: Option[DataFrame] = None
+  def name: String = "text"
+
+  // the text leg's removal probe is also its stats delta, so a shared
+  // verdict would not save it a job
+  override def wantsVerdict: Boolean = false
+
+  protected def column: String = "text"
+  protected def tables: IndexedSeq[String] = IndexedSeq("postings", "lens")
+
+  // the piece's commit record names the tokenizer that cut it
+  override protected def commitFile: Option[(String, String)] =
+    Some(("_tok", BM25Log.tokName(tokenizer)))
+
+  protected def encode(rows: DataFrame): IndexedSeq[DataFrame] = {
+    val fresh = BM25.build(rows, "id", "text", tokenizer)
+    IndexedSeq(fresh.postings, fresh.docLens)
+  }
+
+  protected def empty(i: Int): DataFrame = {
+    import spark.implicits._
+    if (i == 0)
+      Seq.empty[(String, Long, Double, Long)].toDF("term", "id", "dl", "tf")
+    else Seq.empty[(Long, Double)].toDF("id", "dl")
+  }
+
   // folded per-term df (term, df double) — materialized
   private var dfBase: DataFrame = emptyDf
   // signed, batch-vocab-sized df deltas awaiting the next fold
@@ -64,155 +79,31 @@ final class BM25Log(spark: SparkSession,
   private var nDocs: Long = 0L
   private var sumDl: Double = 0.0
 
-  private def matz(df: DataFrame): DataFrame = df.localCheckpoint(true)
-
-  /** Free the cached blocks behind a frame this log materialized.
-    * Durable pieces are `.persist()`ed parquet reads (cache-manager
-    * unpersist); non-durable pieces and EVERY marker/df-delta frame are
-    * `localCheckpoint`ed, whose blocks only the ContextCleaner would
-    * eventually reclaim — a long-lived in-memory store with churn
-    * accumulates them (ADVICE r15, the VecLog pattern this log
-    * originated), so the checkpointed RDD is unpersisted explicitly. */
-  private def free(df: DataFrame): Unit = graft.core.Frames.free(df)
-
-  // ---- durable pieces (the reference flushes each segment as SERIALIZED
-  // index files and loads them at search, storage.go:680-760; with
-  // `persistDir` set, each piece's postings/doc-lens land as parquet under
-  // `dir/seg=N/` — a segment's text is tokenized once EVER, not once per
-  // process, and [[BM25Log.reopen]] seeds a fresh log from the dirs).
-  private def pieceDir(seg: Long): String = s"${persistDir.get}/seg=$seg"
-
-  private def fsOf(path: String) = new org.apache.hadoop.fs.Path(path)
-    .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private def tokFile(seg: Long) =
-    new org.apache.hadoop.fs.Path(s"${pieceDir(seg)}/_tok")
-
-  private def hasPiece(seg: Long): Boolean = persistDir.exists { _ =>
-    // _SUCCESS of the SECOND table written marks the tables complete —
-    // a half-written piece falls back to a rebuild from the segment
-    fsOf(pieceDir(seg)).exists(
-      new org.apache.hadoop.fs.Path(s"${pieceDir(seg)}/lens/_SUCCESS"))
-  }
-
-  /** The tokenizer name this piece's `_tok` commit marker records, None
-    * for a piece that predates per-piece markers (or whose rewrite
-    * crashed before committing — the marker is written LAST). */
-  private def pieceTok(seg: Long): Option[String] = {
-    val fs = fsOf(pieceDir(seg))
-    if (!fs.exists(tokFile(seg))) None
-    else {
-      val in = fs.open(tokFile(seg))
-      try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim)
-      finally in.close()
-    }
-  }
-
-  /** Materialize a fresh piece: parquet under the persist dir (durable,
-    * lineage-free) when configured, else a local checkpoint. Returned
-    * frames are cached; [[release]]/[[collapse]] drop them.
-    *
-    * Durability ordering: the per-piece `_tok` marker (recording the
-    * tokenizer that cut the piece) is DELETED first and re-written only
-    * after both tables land — it is the piece's commit record, so a
-    * crash anywhere mid-write leaves a marker-less (or stale-named)
-    * piece that [[BM25Log.reopen]] rebuilds instead of trusting. The
-    * previous design stamped one dir-level tokenizer file on every
-    * write, which a crash between the stamp and a piece rewrite could
-    * leave claiming a tokenizer the surviving pieces were not cut with
-    * (silent mixed-tokenizer corpus). */
-  private def matzPiece(seg: Long, postings: DataFrame,
-                        lens: DataFrame): (DataFrame, DataFrame) =
-    persistDir match {
-      case Some(_) =>
-        val d = pieceDir(seg)
-        fsOf(d).delete(tokFile(seg), false)
-        postings.write.mode("overwrite").parquet(s"$d/postings")
-        lens.write.mode("overwrite").parquet(s"$d/lens")
-        BM25Log.writeSmallFile(spark, tokFile(seg), BM25Log.tokName(tokenizer))
-        (spark.read.parquet(s"$d/postings").persist(),
-          spark.read.parquet(s"$d/lens").persist())
-      case None => (matz(postings), matz(lens))
-    }
-
-  private def loadPiece(seg: Long): (DataFrame, DataFrame) = {
-    val d = pieceDir(seg)
-    (spark.read.parquet(s"$d/postings").persist(),
-      spark.read.parquet(s"$d/lens").persist())
-  }
-
-  private def dropStalePieceDirs(keep: Set[Long]): Unit =
-    persistDir.foreach { dir =>
-      val fs = fsOf(dir)
-      val root = new org.apache.hadoop.fs.Path(dir)
-      if (fs.exists(root))
-        fs.listStatus(root).foreach { st =>
-          val n = st.getPath.getName.stripPrefix("seg=").toLongOption
-          if (st.getPath.getName.startsWith("seg=") &&
-              n.exists(!keep.contains(_)))
-            fs.delete(st.getPath, true)
-        }
-    }
-
-  private def unpersistPieces(ps: Seq[(Long, DataFrame, DataFrame)]): Unit =
-    // BOTH modes — non-durable pieces are checkpoint blocks the
-    // ContextCleaner would otherwise sit on
-    ps.foreach { case (_, p, l) => free(p); free(l) }
-
   private def emptyDf: DataFrame = {
     import spark.implicits._
     Seq.empty[(String, Double)].toDF("term", "df")
   }
-  private def emptyPostings: DataFrame = {
-    import spark.implicits._
-    Seq.empty[(String, Long, Double, Long)].toDF("term", "id", "dl", "tf")
-  }
-  private def emptyLens: DataFrame = {
-    import spark.implicits._
-    Seq.empty[(Long, Double)].toDF("id", "dl")
-  }
 
-  /** Newest-wins live view over tagged piece frames (same marker ordering
-    * as SegmentStore.read: a row survives iff seg > its id's marker). */
-  private def liveView(select: ((Long, DataFrame, DataFrame)) => DataFrame,
-                       empty: => DataFrame): DataFrame = {
-    if (pieces.isEmpty) return empty
-    val tagged = graft.core.Frames.balancedUnion(
-      pieces.map { p => select(p).withColumn("_seg", lit(p._1)) })
-    markers match {
-      case Some(m) =>
-        tagged.join(m, Seq("id"), "left")
-          .filter(col("upto").isNull || col("_seg") > col("upto"))
-          .drop("_seg", "upto")
-      case None => tagged.drop("_seg")
-    }
-  }
+  private def lensStats(lens: DataFrame) =
+    lens.agg(count(lit(1)).as("n"), coalesce(sum(col("dl")), lit(0.0)).as("s"))
+      .head()
 
   /** Live postings across all pieces (lazy; scans materialized blocks). */
-  def livePostings: DataFrame = liveView(_._2, emptyPostings)
+  def livePostings: DataFrame = live(0)
 
   /** Live (id, dl) across all pieces (lazy). */
-  def liveDocLens: DataFrame = liveView(_._3, emptyLens)
+  def liveDocLens: DataFrame = live(1)
 
-  /** Mask the live instances of `ids` in segments <= `upto`, folding
-    * their df/stats contribution OUT by delta. The overlap probe runs on
-    * the doc-lens view first (rows ∝ n_docs, far smaller than postings);
-    * the postings view is only probed when something was actually live —
-    * so an append-only workload never scans postings at all. */
-  private def applyRemoval(ids: DataFrame, upto: Long,
-                           liveHit: Option[Boolean]): Unit = {
-    // the owning facade's SHARED verdict (one probe per mutation across
-    // every attached leg — VERDICT r15): false is EXACT (the probed
-    // superset — raw store segment ids — held no instance, so nothing
-    // here can need masking) and skips with zero jobs. A true/unknown
-    // verdict still runs the doc-lens aggregation below: unlike the
-    // vector legs' boolean probes, this ONE job is also the stats
-    // delta (n docs, Σdl) the fold needs anyway.
-    if (liveHit.contains(false)) return
-    val del = matz(ids.select(col("id").cast("long").as("id")).distinct())
-    val hit = liveDocLens.join(del, Seq("id"), "left_semi")
-      .agg(count(lit(1)).as("n"), coalesce(sum(col("dl")), lit(0.0)).as("s"))
-      .head()
+  /** Fold the removed docs' df/stats contribution OUT by delta. The
+    * overlap probe runs on the doc-lens view first (rows ∝ n_docs, far
+    * smaller than postings); the postings view is only probed when
+    * something was actually live — so an append-only workload never
+    * scans postings at all. Unlike the vector legs' boolean probes, this
+    * ONE job is also the stats delta, so it runs on a true/unknown
+    * verdict alike. */
+  override protected def removed(del: DataFrame,
+                                 liveHit: Option[Boolean]): Boolean = {
+    val hit = lensStats(liveDocLens.join(del, Seq("id"), "left_semi"))
     val n = hit.getLong(0)
     if (n > 0) {
       nDocs -= n
@@ -223,93 +114,39 @@ final class BM25Log(spark: SparkSession,
       dfDeltas :+= matz(livePostings.join(del, Seq("id"), "left_semi")
         .groupBy(col("term"))
         .agg((count(lit(1)) * lit(-1.0)).as("df")))
-      val add = del.withColumn("upto", lit(upto))
-      val old = markers
-      markers = Some(matz(markers.fold(add)(_.unionByName(add))
-        .groupBy(col("id")).agg(max(col("upto")).as("upto"))))
-      // the new frame is eagerly materialized, so the superseded one's
-      // checkpoint blocks are dead weight from here on
-      old.foreach(free)
     }
-    free(del)
+    n > 0
   }
 
-  /** Index one appended segment. `batch` carries `id` plus (optionally)
-    * `text`; ids REPLACE any live older instance (memtable contract), and
-    * a null-text row replacing a text row removes it from the corpus. */
-  def append(batch: DataFrame, seg: Long,
-             liveHit: Option[Boolean] = None): Unit = {
-    // Idempotent per segment: a concurrent first search can seed the log
-    // (reopen covers every store segment, including one whose writer has
-    // flushed but not yet folded) between the store write and this fold —
-    // folding it AGAIN would double-count its postings/df/stats. A no-text
-    // batch leaves no piece, but its removal probe below is masked-aware
-    // and re-applies as a no-op, so the piece check alone is sufficient.
-    if (pieces.exists(_._1 == seg)) return
-    applyRemoval(batch.select(col("id")), upto = seg - 1, liveHit)
-    if (batch.columns.contains("text")) {
-      val fresh = BM25.build(batch.filter(col("text").isNotNull),
-        "id", "text", tokenizer)
-      val (p, l) = matzPiece(seg, fresh.postings, fresh.docLens)
-      val st = l.agg(count(lit(1)).as("n"),
-        coalesce(sum(col("dl")), lit(0.0)).as("s")).head()
-      if (st.getLong(0) > 0) {
-        pieces :+= ((seg, p, l))
-        // df delta from the MATERIALIZED piece (not the lazy build plan,
-        // which would re-tokenize the batch a second time)
-        dfDeltas :+= matz(p.groupBy(col("term"))
-          .agg(count(lit(1)).cast("double").as("df")))
-        nDocs += st.getLong(0)
-        sumDl += st.getDouble(1)
-      }
+  override protected def admit(p: PieceLog.Piece): Boolean = {
+    val st = lensStats(p.frames(1))
+    val n = st.getLong(0)
+    if (n > 0) {
+      // df delta from the MATERIALIZED piece (not the lazy build plan,
+      // which would re-tokenize the batch a second time)
+      dfDeltas :+= matz(p.frames(0).groupBy(col("term"))
+        .agg(count(lit(1)).cast("double").as("df")))
+      nDocs += n
+      sumDl += st.getDouble(1)
     }
+    n > 0
   }
 
-  /** Remove by id (the store's tombstone write): `upto` is the newest
-    * segment id at delete time, so a later re-append (seg > upto) is live
-    * again. */
-  def delete(ids: DataFrame, upto: Long,
-             liveHit: Option[Boolean] = None): Unit =
-    applyRemoval(ids, upto, liveHit)
-
-  /** Post-compaction collapse: the live view becomes ONE piece tagged
-    * with the compacted segment id, markers reset. df/stats are already
-    * live-exact and carry over untouched. O(live corpus) — amortized into
-    * the compaction, which already rewrites the same data. */
-  def collapse(seg: Long): Unit = {
+  /** Post-compaction collapse: df/stats are already live-exact and carry
+    * over untouched. */
+  override def collapse(seg: Long): Unit = {
     foldDf()
-    val old = pieces
-    val oldMarkers = markers
-    val (p, l) = matzPiece(seg, livePostings, liveDocLens)
-    pieces = Vector((seg, p, l))
-    markers = None
-    unpersistPieces(old)
-    oldMarkers.foreach(free)
-    // one-cycle deferral, mirroring SegmentStore's retirement manifests:
-    // the JUST-superseded piece dirs stay readable for frames planned
-    // before this compaction; older generations are past grace
-    dropStalePieceDirs(keep = old.map(_._1).toSet + seg)
+    super.collapse(seg)
   }
 
-  /** Drop cached piece, marker, and df frames. With `vacuumStale` (the
-    * facade's WRITER close path, mirroring SegmentStore.close's vacuum
-    * — ADVICE r18 #5), piece dirs superseded by a collapse are also
-    * deleted (keep = current pieces only). Pure readers pass `false`. */
-  def release(vacuumStale: Boolean = false): Unit = {
-    if (vacuumStale) dropStalePieceDirs(keep = pieces.map(_._1).toSet)
-    unpersistPieces(pieces)
-    pieces = Vector.empty
-    markers.foreach(free)
-    markers = None
+  /** Drop cached piece, marker, and df frames. */
+  override def release(vacuumStale: Boolean = false): Unit = {
+    super.release(vacuumStale)
     dfDeltas.foreach(free)
     dfDeltas = Vector.empty
     free(dfBase)
     dfBase = emptyDf
   }
-
-  /** Marker-table row count (observability: append-only histories must
-    * keep this at zero — the facade's shared liveness probe contract). */
-  private[graft] def markerRows: Long = markers.map(_.count()).getOrElse(0L)
 
   private def foldDf(): Unit = if (dfDeltas.nonEmpty) {
     val old = dfBase +: dfDeltas
@@ -319,6 +156,17 @@ final class BM25Log(spark: SparkSession,
     dfDeltas = Vector.empty
     // folded into the new base (eagerly materialized) — free the inputs
     old.foreach(free)
+  }
+
+  /** History-free folded state from the live views (one keyed shuffle
+    * over cached postings + one lens aggregation — NO tokenize). */
+  private def refold(): Unit = {
+    dfBase = matz(livePostings.groupBy(col("term"))
+      .agg(count(lit(1)).cast("double").as("df")))
+    dfDeltas = Vector.empty
+    val st = lensStats(liveDocLens)
+    nDocs = st.getLong(0)
+    sumDl = st.getDouble(1)
   }
 
   /** The current corpus as lazy views — score-equivalent to
@@ -337,9 +185,6 @@ final class BM25Log(spark: SparkSession,
 
   /** Documents currently indexed (driver scalar, O(1)). */
   def docCount: Long = nDocs
-
-  /** Number of live pieces (segments contributing postings). */
-  def pieceCount: Int = pieces.size
 }
 
 object BM25Log {
@@ -357,19 +202,6 @@ object BM25Log {
     case _              => "simple"
   }
 
-  private[text] def writeSmallFile(spark: SparkSession,
-                                   p: org.apache.hadoop.fs.Path,
-                                   content: String): Unit = {
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
-    try out.write(content.getBytes("UTF-8")) finally out.close()
-  }
-
-  private def writeTokenizerMeta(spark: SparkSession, dir: String,
-                                 t: Tokenize.Tokenizer): Unit =
-    writeSmallFile(spark,
-      new org.apache.hadoop.fs.Path(s"$dir/_tokenizer"), tokName(t))
-
   /** Reopen a log over a store's live segments, loading DURABLE pieces
     * written by a previous process where they exist and tokenizing only
     * the segments that lack one (new store, foreign writer, or a
@@ -385,12 +217,11 @@ object BM25Log {
     * class, so a piece whose marker is absent or names another tokenizer
     * is DISCARDED and its segment re-tokenizes under the configured
     * tokenizer (then re-persists, committing the new marker). There is
-    * deliberately NO dir-level grandfathering: the pre-marker design
-    * stamped one dir-level name before rewriting, so a crash could leave
-    * old-tokenizer pieces under a matching stamp — marker-less pieces
-    * always rebuild. The dir-level `_tokenizer` stamp survives as
-    * observability, written only AFTER every segment is
-    * load-or-rewritten.
+    * deliberately NO dir-level grandfathering: a dir-level stamp written
+    * before a rewrite could leave old-tokenizer pieces under a matching
+    * stamp after a crash, so marker-less pieces always rebuild. The
+    * dir-level `_tokenizer` stamp survives as observability, written only
+    * AFTER every segment is load-or-rewritten.
     *
     * @param segText  per-segment frame with `id` (+ `text` if present)
     * @param markers  the newest-wins/tombstone mask REDERIVED from the
@@ -407,44 +238,11 @@ object BM25Log {
              segText: Long => DataFrame, markers: Option[DataFrame],
              tokenizer: Tokenize.Tokenizer = Tokenize.Simple): BM25Log = {
     val log = new BM25Log(spark, tokenizer, Some(persistDir))
-    // pieces of segments that no longer exist (a compaction ran without
-    // this log attached) are unreachable forever — reclaim the disk
-    log.dropStalePieceDirs(keep = segs.toSet)
-    segs.foreach { n =>
-      // trust ONLY a piece whose own commit marker names the configured
-      // tokenizer. A marker-less piece is NOT grandfathered by the
-      // dir-level stamp: the pre-marker design stamped the dir before
-      // rewriting, so a crash could leave old-tokenizer pieces under a
-      // matching stamp — indistinguishable from legitimate ones. Pieces
-      // are a derived cache; rebuilding is always correct.
-      val usable =
-        log.hasPiece(n) && log.pieceTok(n).contains(tokName(tokenizer))
-      if (usable) {
-        val (p, l) = log.loadPiece(n)
-        log.pieces :+= ((n, p, l))
-      } else {
-        val frame = segText(n)
-        if (frame.columns.contains("text")) {
-          val fresh = BM25.build(frame.filter(col("text").isNotNull),
-            "id", "text", tokenizer)
-          val (p, l) = log.matzPiece(n, fresh.postings, fresh.docLens)
-          log.pieces :+= ((n, p, l))
-        }
-      }
-    }
-    // stamp the dir only now, after EVERY segment is load-or-rewritten
-    // under the configured tokenizer — never before the rewrite loop
-    writeTokenizerMeta(spark, persistDir, tokenizer)
-    log.markers = markers.map(log.matz)
-    // history-free folded state from the live views (one keyed shuffle
-    // over cached postings + one lens aggregation — NO tokenize)
-    log.dfBase = log.matz(log.livePostings.groupBy(col("term"))
-      .agg(count(lit(1)).cast("double").as("df")))
-    log.dfDeltas = Vector.empty
-    val st = log.liveDocLens.agg(count(lit(1)).as("n"),
-      coalesce(sum(col("dl")), lit(0.0)).as("s")).head()
-    log.nDocs = st.getLong(0)
-    log.sumDl = st.getDouble(1)
+    log.load(segs, segText, markers)
+    PieceLog.writeSmallFile(spark,
+      new org.apache.hadoop.fs.Path(s"$persistDir/_tokenizer"),
+      tokName(tokenizer))
+    log.refold()
     log
   }
 }

@@ -48,7 +48,10 @@ import org.apache.spark.sql.functions._
   * NOT thread-safe; guard with the owning store's lock (as
   * [[graft.store.HybridStore]] does).
   */
-final class HnswLog private (val metric: Metric) {
+final class HnswLog private (val metric: Metric)
+    extends graft.core.StoreLeg {
+
+  def name: String = "hnsw"
 
   private var idx: Hnsw.Index = null
   // segment ids already folded in — the idempotency guard for the
@@ -69,11 +72,12 @@ final class HnswLog private (val metric: Metric) {
   private var sinceCheckpoint: Int = 0
 
   // Configured by the owning store when durable persistence is on: the
-  // graph ALSO persists every checkpoint cadence (16 generation swaps)
-  // — the localCheckpoint is materializing the full graph at that point
-  // anyway, so the parquet dump rides along — bounding crash recovery
-  // for a long-streaming store that never crosses a compaction trigger
-  // to replay-since-last-persist instead of a full re-seed.
+  // graph persists after every collapse and at release, and ALSO every
+  // checkpoint cadence (16 generation swaps) — the localCheckpoint is
+  // materializing the full graph at that point anyway, so the parquet
+  // dump rides along — bounding crash recovery for a long-streaming
+  // store that never crosses a compaction trigger to
+  // replay-since-last-persist instead of a full re-seed.
   private var autoPersist:
     Option[(org.apache.spark.sql.SparkSession, String)] = None
 
@@ -115,7 +119,8 @@ final class HnswLog private (val metric: Metric) {
     * The removal ids are collected to the driver: they are bounded by the
     * MUTATION batch (the reference's Remove likewise takes an explicit id
     * list), never by the corpus. */
-  def append(batch: DataFrame, seg: Long): Unit = {
+  def append(batch: DataFrame, seg: Long,
+             liveHit: Option[Boolean] = None): Unit = {
     if (folded(seg)) return
     val hasVec = batch.columns.contains("vector")
     val gone = if (hasVec) batch.filter(col("vector").isNull) else batch
@@ -133,6 +138,11 @@ final class HnswLog private (val metric: Metric) {
     // vectors are not in the dumped graph yet
     folded += seg
   }
+
+  /** The store's tombstone write: soft-deletes `ids` (see below). */
+  def delete(ids: DataFrame, upto: Long, liveHit: Option[Boolean]): Unit =
+    delete(ids.select(col("id").cast("long")).collect().map(_.getLong(0))
+      .toSeq)
 
   /** Soft-delete marks; absent (or already-deleted) ids are harmless —
     * and FREE: ids are filtered against the graph's live set first, so a
@@ -156,17 +166,26 @@ final class HnswLog private (val metric: Metric) {
 
   /** Post-compaction flush: hard-purge tombstoned nodes and rewire
     * survivors ([[Hnsw.deleteFlush]]) — the graph now matches the
-    * compacted single-segment store exactly. */
+    * compacted single-segment store exactly. With persistence on, the
+    * collapsed graph is written here too: compaction already pays an
+    * O(live) rewrite, and a crash before the next close then replays
+    * only since this compaction. */
   def collapse(seg: Long): Unit = {
     folded = Set(seg)
     swap(Hnsw.deleteFlush(idx, Seq.empty))
+    autoPersist.foreach { case (s, d) => persistTo(s, d) }
   }
 
-  /** Release the resident shard graphs. */
-  def release(): Unit = {
-    if (idx != null) idx.unpersist()
-    idx = null
-  }
+  /** Release the resident shard graphs; with persistence on, a mutated
+    * graph is written first so the next process loads + replays instead
+    * of re-running the seed build. The graph has no superseded durable
+    * state, so `vacuumStale` has nothing to delete. */
+  def release(vacuumStale: Boolean = false): Unit =
+    try autoPersist.foreach { case (s, d) => persistTo(s, d) }
+    finally {
+      if (idx != null) idx.unpersist()
+      idx = null
+    }
 
   // mutated since load/persist — a clean close skips the graph rewrite
   private var dirty: Boolean = true
@@ -193,7 +212,6 @@ final class HnswLog private (val metric: Metric) {
     dirty = false
   }
 
-  private[vector] def markDirty(): Unit = dirty = true
   private[vector] def markClean(): Unit = dirty = false
 
   /** Segments folded so far (observability for specs/probes). */

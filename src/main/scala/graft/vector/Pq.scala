@@ -136,31 +136,72 @@ object Pq {
     * flat_index.go:366-463 write pattern: header + codebooks + codes). */
   def write(model: Model, encoded: DataFrame, path: String): Unit = {
     val spark = encoded.sparkSession
+    writeCodebooks(spark, s"$path/codebooks", model)
+    // OPQ rotation rides along — an artifact read without it would
+    // decode codes against un-rotated queries
+    writeRotation(spark, s"$path/_rotation", model.rotation)
+    encoded.write.mode("overwrite").parquet(s"$path/codes")
+    writeMeta(spark, path, s"""{"metric":"${metricName(model.metric)}"}""")
+  }
+
+  /** Persist a model's codebooks as `(subspace, centroid, vec)` rows. */
+  private[vector] def writeCodebooks(
+      spark: org.apache.spark.sql.SparkSession, dir: String,
+      model: Model): Unit = {
     import spark.implicits._
     val cb = for {
       s <- 0 until model.m
       j <- model.codebooks(s).indices
     } yield (s, j, model.codebooks(s)(j).toSeq)
     cb.toDF("subspace", "centroid", "vec")
-      .repartition(1).write.mode("overwrite").parquet(s"$path/codebooks")
-    // OPQ rotation rides along (row-indexed) — an artifact read without
-    // it would decode codes against un-rotated queries. A rotation-LESS
-    // model must also DELETE any stale _rotation left by a previous
-    // write at this path: resurrecting an old rotation onto new
-    // codebooks rotates queries into a space those codebooks were never
-    // trained in — silently wrong neighbors.
-    model.rotation match {
+      .repartition(1).write.mode("overwrite").parquet(dir)
+  }
+
+  /** The codebooks [[writeCodebooks]] wrote, indexed `[subspace][centroid]`;
+    * empty for an empty dataset. */
+  private[vector] def readCodebooks(
+      spark: org.apache.spark.sql.SparkSession,
+      dir: String): Array[Array[Array[Float]]] = {
+    val rows = spark.read.parquet(dir)
+      .select(col("subspace"), col("centroid"), col("vec")).collect()
+    if (rows.isEmpty) return Array.empty
+    val codebooks = Array.ofDim[Array[Float]](
+      rows.iterator.map(_.getInt(0)).max + 1,
+      rows.iterator.map(_.getInt(1)).max + 1)
+    rows.foreach { r =>
+      codebooks(r.getInt(0))(r.getInt(1)) = r.getSeq[Float](2).toArray
+    }
+    codebooks
+  }
+
+  /** Persist an OPQ rotation (row-indexed) under `dir`. A rotation-LESS
+    * model DELETES any stale rotation a previous write left there:
+    * resurrecting an old rotation onto new codebooks or centroids
+    * rotates queries into a space they were never trained in — silently
+    * wrong neighbors. */
+  private[vector] def writeRotation(
+      spark: org.apache.spark.sql.SparkSession, dir: String,
+      rotation: Option[Array[Array[Float]]]): Unit =
+    rotation match {
       case Some(r) =>
+        import spark.implicits._
         r.zipWithIndex.map { case (row, i) => (i, row.toSeq) }.toSeq
           .toDF("i", "vec")
-          .repartition(1).write.mode("overwrite").parquet(s"$path/_rotation")
+          .repartition(1).write.mode("overwrite").parquet(dir)
       case None =>
-        val p = new org.apache.hadoop.fs.Path(s"$path/_rotation")
-        p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          .delete(p, true)
+        val p = new org.apache.hadoop.fs.Path(dir)
+        p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
     }
-    encoded.write.mode("overwrite").parquet(s"$path/codes")
-    writeMeta(spark, path, s"""{"metric":"${metricName(model.metric)}"}""")
+
+  /** The rotation [[writeRotation]] committed under `dir`, if any. */
+  private[vector] def readRotation(
+      spark: org.apache.spark.sql.SparkSession,
+      dir: String): Option[Array[Array[Float]]] = {
+    val p = new org.apache.hadoop.fs.Path(s"$dir/_SUCCESS")
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p)) None
+    else Some(spark.read.parquet(dir).orderBy(col("i"))
+      .collect().map(_.getSeq[Float](1).toArray))
   }
 
   /** Total over all five [[Metric]] cases so ANY built index round-trips
@@ -265,23 +306,11 @@ object Pq {
     * centroids survive the parquet round trip exactly). */
   def read(spark: org.apache.spark.sql.SparkSession,
            path: String): (Model, DataFrame) = {
-    val rows = spark.read.parquet(s"$path/codebooks")
-      .select(col("subspace"), col("centroid"), col("vec")).collect()
-    val m = rows.iterator.map(_.getInt(0)).max + 1
-    val ksub = rows.iterator.map(_.getInt(1)).max + 1
-    val codebooks = Array.ofDim[Array[Float]](m, ksub)
-    rows.foreach { r =>
-      codebooks(r.getInt(0))(r.getInt(1)) = r.getSeq[Float](2).toArray
-    }
+    val codebooks = readCodebooks(spark, s"$path/codebooks")
+    val (m, ksub) = (codebooks.length, codebooks(0).length)
     val dsub = codebooks(0)(0).length
     val met = requiredMetric(spark, path)
-    val rotP = new org.apache.hadoop.fs.Path(s"$path/_rotation/_SUCCESS")
-    val rot =
-      if (rotP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-            .exists(rotP))
-        Some(spark.read.parquet(s"$path/_rotation").orderBy(col("i"))
-          .collect().map(_.getSeq[Float](1).toArray))
-      else None
+    val rot = readRotation(spark, s"$path/_rotation")
     (Model(m, ksub, dsub, codebooks, met, rot),
       spark.read.parquet(s"$path/codes"))
   }
@@ -929,11 +958,7 @@ object IvfPq {
     * the flat_index.go:366-463 frame pattern). */
   def write(index: Index, path: String): Unit = {
     val spark = index.encoded.sparkSession
-    import spark.implicits._
-    index.coarse.centroids.zipWithIndex
-      .map { case (c, i) => (i, c.toSeq) }.toSeq
-      .toDF("cluster", "vec")
-      .repartition(1).write.mode("overwrite").parquet(s"$path/coarse")
+    writeCoarse(spark, s"$path/coarse", index.coarse)
     Pq.write(index.pq, index.encoded, path)
     // the OUTER whole-space OPQ rotation persists under its own dir —
     // NOT Pq's _rotation (that is the inner model's slot, and Pq.write
@@ -941,39 +966,41 @@ object IvfPq {
     // model). Same stale-delete discipline: a rotation-less index must
     // clear a previous write's _opq or a reloaded index would rotate
     // queries into a space these centroids were never trained in.
-    index.rotation match {
-      case Some(r) =>
-        r.zipWithIndex.map { case (row, i) => (i, row.toSeq) }.toSeq
-          .toDF("i", "vec")
-          .repartition(1).write.mode("overwrite").parquet(s"$path/_opq")
-      case None =>
-        val p = new org.apache.hadoop.fs.Path(s"$path/_opq")
-        p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          .delete(p, true)
-    }
+    Pq.writeRotation(spark, s"$path/_opq", index.rotation)
     // overwrite the meta with BOTH metrics: the inner model's (residual
     // space, always L2 here) and the outer index's
     Pq.writeMeta(spark, path,
       s"""{"metric":"${Pq.metricName(index.pq.metric)}","ivfpq_metric":"${Pq.metricName(index.metric)}"}""")
   }
 
-  /** Load a persisted IVFPQ index; search on the loaded index is
-    * bit-identical to the original. */
-  def read(spark: org.apache.spark.sql.SparkSession, path: String): Index = {
-    val rows = spark.read.parquet(s"$path/coarse")
+  /** Persist coarse centroids as `(cluster, vec)` rows. */
+  private[vector] def writeCoarse(spark: org.apache.spark.sql.SparkSession,
+                                  dir: String, coarse: Kmeans.Model): Unit = {
+    import spark.implicits._
+    coarse.centroids.zipWithIndex
+      .map { case (c, i) => (i, c.toSeq) }.toSeq
+      .toDF("cluster", "vec")
+      .repartition(1).write.mode("overwrite").parquet(dir)
+  }
+
+  /** The coarse centroids [[writeCoarse]] wrote. */
+  private[vector] def readCoarse(spark: org.apache.spark.sql.SparkSession,
+                                 dir: String): Kmeans.Model = {
+    val rows = spark.read.parquet(dir)
       .select(col("cluster"), col("vec")).collect()
     val centroids = Array.ofDim[Array[Float]](rows.length)
     rows.foreach(r => centroids(r.getInt(0)) = r.getSeq[Float](1).toArray)
+    Kmeans.Model(centroids)
+  }
+
+  /** Load a persisted IVFPQ index; search on the loaded index is
+    * bit-identical to the original. */
+  def read(spark: org.apache.spark.sql.SparkSession, path: String): Index = {
+    val coarse = readCoarse(spark, s"$path/coarse")
     val (pq, encoded) = Pq.read(spark, path)
     val outer = Pq.requiredMetric(spark, path, key = "ivfpq_metric")
-    val opqP = new org.apache.hadoop.fs.Path(s"$path/_opq/_SUCCESS")
-    val rotation =
-      if (opqP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-            .exists(opqP))
-        Some(spark.read.parquet(s"$path/_opq").orderBy(col("i"))
-          .collect().map(_.getSeq[Float](1).toArray))
-      else None
-    Index(encoded, Kmeans.Model(centroids), pq, outer, rotation)
+    Index(encoded, coarse, pq, outer,
+      Pq.readRotation(spark, s"$path/_opq"))
   }
 
   /** @param threshold  ADC distance cutoff (ivfpq_index_search.go:312-315)

@@ -23,9 +23,8 @@ import org.apache.spark.sql.functions._
   *     projection at batch cost, M bytes of code per vector at rest
   *     (the compression PQ exists for), durable as parquet when
   *     `persistDir` is set;
-  *   - newest-wins `(id, upto)` markers (same delete-marker ordering as
-  *     SegmentStore.read) mask replaced/deleted instances — a delete
-  *     costs a marker row, never an anti-join rewrite.
+  *   - pieces, newest-wins markers, collapse and the retrain commit
+  *     sequence are the shared [[graft.core.PieceLog]] protocol.
   *
   * Serving is ADC over [[liveCodes]] (a codegen [[graft.expr.AdcDist]]
   * scan), optionally refined against the store's raw live vectors
@@ -63,37 +62,17 @@ final class PqLog private (spark: SparkSession, val model: Pq.Model,
                            persistDir: Option[String],
                            val coarse: Option[Kmeans.Model] = None,
                            val outerRotation: Option[Array[Array[Float]]] = None,
-                           outerMetric0: Option[Metric] = None) {
+                           outerMetric0: Option[Metric] = None)
+    extends graft.core.PieceLog(spark, persistDir) {
 
   /** Score space of the SERVED leg: the store's configured metric for a
     * routed log (the inner residual model always trains in L2), the
     * model's own metric otherwise. */
   val servingMetric: Metric = outerMetric0.getOrElse(model.metric)
 
-  // (segment id, coded(id, codes)) — materialized
-  private var pieces: Vector[(Long, DataFrame)] = Vector.empty
-  private var markers: Option[DataFrame] = None
-
-  private def matz(df: DataFrame): DataFrame = df.localCheckpoint(true)
-
-  /** Free the cached blocks behind a frame this log materialized.
-    * Durable pieces are `.persist()`ed parquet reads (cache-manager
-    * unpersist); non-durable pieces and EVERY marker/scratch frame are
-    * `localCheckpoint`ed, whose blocks only the ContextCleaner would
-    * eventually reclaim — a long-lived in-memory store with churn
-    * accumulates them (ADVICE r15), so the checkpointed RDD is
-    * unpersisted explicitly. */
-  private def free(df: DataFrame): Unit = graft.core.Frames.free(df)
-
-  private def fsOf(path: String) = new org.apache.hadoop.fs.Path(path)
-    .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private def pieceDir(seg: Long): String = s"${persistDir.get}/seg=$seg"
-
-  private def hasPiece(seg: Long): Boolean = persistDir.exists { _ =>
-    fsOf(pieceDir(seg)).exists(
-      new org.apache.hadoop.fs.Path(s"${pieceDir(seg)}/_SUCCESS"))
-  }
+  def name: String = "pq"
+  protected def column: String = "vector"
+  protected def tables: IndexedSeq[String] = IndexedSeq("")
 
   /** Encode one batch under the train-time model. Unrouted: [[Pq.encode]]
     * preps in the model's metric space (normalize-at-insert for cosine),
@@ -101,46 +80,30 @@ final class PqLog private (spark: SparkSession, val model: Pq.Model,
     * `(id, codes)`. Routed: [[IvfPq.encode]] — prep, whole-space
     * rotation, coarse assignment, residual, PQ code — emits
     * `(id, cluster, codes)`. */
-  private def code(batch: DataFrame): DataFrame = {
-    val in = batch.select(col("id").cast("long").as("id"), col("vector"))
-    coarse match {
+  protected def encode(rows: DataFrame): IndexedSeq[DataFrame] = {
+    val in = rows.select(col("id").cast("long").as("id"), col("vector"))
+    IndexedSeq(coarse match {
       case Some(c) => IvfPq.encode(in, c, model,
         metric = servingMetric, rotation = outerRotation)
       case None => Pq.encode(in, model)
-    }
+    })
   }
 
-  /** Routed pieces are RANGE-partitioned by list id, then sorted: a
-    * piece written from an id-ordered batch with only a within-partition
-    * sort leaves every file carrying all nlist clusters (at 10M rows a
-    * file is one ~12 MB row group — nothing for the probe's
-    * `cluster IN (...)` predicate to skip; measured r16, fixed with a
-    * cluster shuffle). HASH partitioning (the r16 fix) was still leaky
-    * at the STATS level, measured r17: each file then holds
-    * hash-coincident lists (e.g. clusters 3 and 35), so the one batch /
-    * row group straddling the boundary carries stats [3,35] and
-    * survives ANY probe in between — at 1M that was 32 straddling
-    * batches x 10k rows = a scan of 447k rows against a probed mass of
-    * 126k (3.6x, the plan-metric gate caught it). RANGE partitioning
-    * makes every boundary span only ADJACENT clusters, so batch /
-    * row-group min-max stats are tight and the probed scan reads
-    * ~probed mass at any corpus size. One batch-sized shuffle (plus the
-    * range sampler's cheap pass) per fold; the 10M seed pays it once,
-    * amortized into the encode job. */
-  private def clusterLocal(coded: DataFrame): DataFrame =
-    coded.repartitionByRange(col("cluster")).sortWithinPartitions("cluster")
+  /** Routed pieces are RANGE-partitioned by list id, then sorted, so the
+    * probe's `cluster IN (...)` predicate prunes files and row groups: an
+    * id-ordered piece leaves every file carrying all nlist clusters, and
+    * HASH partitioning leaves row groups straddling non-adjacent lists
+    * (stats [3,35] survive any probe in between — a 3.6x over-scan at
+    * 1M). With range partitioning every boundary spans only ADJACENT
+    * clusters, so min-max stats are tight and the probed scan reads
+    * ~probed mass at any corpus size, for one batch-sized shuffle (plus
+    * the range sampler's pass) per fold. */
+  override protected def layout(coded: DataFrame): DataFrame =
+    if (coarse.isEmpty) coded
+    else coded.repartitionByRange(col("cluster"))
+      .sortWithinPartitions("cluster")
 
-  private def matzPiece(seg: Long, coded: DataFrame): DataFrame = {
-    val toWrite = if (coarse.nonEmpty) clusterLocal(coded) else coded
-    persistDir match {
-      case Some(_) =>
-        toWrite.write.mode("overwrite").parquet(pieceDir(seg))
-        spark.read.parquet(pieceDir(seg)).persist()
-      case None => matz(toWrite)
-    }
-  }
-
-  private def emptyCoded: DataFrame = {
+  protected def empty(i: Int): DataFrame = {
     import spark.implicits._
     if (coarse.nonEmpty)
       Seq.empty[(Long, Int, Array[Int])].toDF("id", "cluster", "codes")
@@ -148,131 +111,7 @@ final class PqLog private (spark: SparkSession, val model: Pq.Model,
   }
 
   /** Live coded view: union of pieces, newest-wins via markers. */
-  def liveCodes: DataFrame = {
-    if (pieces.isEmpty) return emptyCoded
-    val tagged = graft.core.Frames.balancedUnion(
-      pieces.map { case (seg, df) => df.withColumn("_seg", lit(seg)) })
-    markers match {
-      case Some(m) =>
-        tagged.join(m, Seq("id"), "left")
-          .filter(col("upto").isNull || col("_seg") > col("upto"))
-          .drop("_seg", "upto")
-      case None => tagged.drop("_seg")
-    }
-  }
-
-  private def applyRemoval(ids: DataFrame, upto: Long,
-                           liveHit: Option[Boolean]): Unit = {
-    // the owning facade's SHARED verdict (one probe per mutation, not
-    // one per leg — VERDICT r15): false is EXACT (the probed superset —
-    // raw store segment ids — held no instance, so this leg holds none
-    // either) and skips with zero jobs; true is a SUPERSET verdict (the
-    // instance found may be masked or vector-less here), so the marker
-    // written below may mask nothing — harmless: markers only act on
-    // matching piece rows from segments <= upto
-    if (liveHit.contains(false)) return
-    val del = matz(ids.select(col("id").cast("long").as("id")).distinct())
-    // unshared path: marker only when something live is actually masked
-    // (append-only workloads keep the marker table empty) — a pruned
-    // probe over the cached piece id columns (id-clustered parquet
-    // under persistence)
-    val hit = liveHit.getOrElse(liveCodes.select(col("id"))
-      .join(del, Seq("id"), "left_semi").limit(1).count() > 0)
-    if (hit) {
-      val add = del.withColumn("upto", lit(upto))
-      val old = markers
-      markers = Some(matz(markers.fold(add)(_.unionByName(add))
-        .groupBy(col("id")).agg(max(col("upto")).as("upto"))))
-      // the new frame is eagerly materialized, so the superseded one's
-      // checkpoint blocks are dead weight from here on
-      old.foreach(free)
-    }
-    free(del)
-  }
-
-  /** Fold one appended segment in at BATCH cost: encode projection +
-    * marker maintenance, no retrain, no corpus rewrite. `liveHit` is the
-    * owning facade's shared replacement-probe verdict (see
-    * [[applyRemoval]]); standalone callers leave it None. */
-  def append(batch: DataFrame, seg: Long,
-             liveHit: Option[Boolean] = None): Unit = {
-    // idempotent per segment — same contract as [[VecLog.append]]
-    if (pieces.exists(_._1 == seg)) return
-    applyRemoval(batch.select(col("id")), upto = seg - 1, liveHit)
-    if (batch.columns.contains("vector")) {
-      val rows = batch.filter(col("vector").isNotNull)
-      val p = matzPiece(seg, code(rows))
-      pieces :+= ((seg, p))
-    }
-  }
-
-  def delete(ids: DataFrame, upto: Long,
-             liveHit: Option[Boolean] = None): Unit =
-    applyRemoval(ids, upto, liveHit)
-
-  /** Post-compaction collapse to one piece under the compacted segment
-    * id; markers reset; codebooks untouched (train-time state, like the
-    * reference's Flush purging soft-deleted codes while the codebooks
-    * survive, pq_index_test.go:350-454). */
-  def collapse(seg: Long): Unit = {
-    val old = pieces
-    val oldMarkers = markers
-    val p = matzPiece(seg, liveCodes)
-    pieces = Vector((seg, p))
-    markers = None
-    // free superseded frames in BOTH modes — non-durable pieces are
-    // checkpoint blocks the ContextCleaner would otherwise sit on
-    // (durable pieces only lose their cache here: an in-flight search
-    // frame recomputes from the parquet, which survives one cycle below)
-    old.foreach { case (_, df) => free(df) }
-    oldMarkers.foreach(free)
-    // one-cycle deferral, mirroring SegmentStore's retirement manifests:
-    // the JUST-superseded piece dirs stay readable for frames planned
-    // before this compaction; older generations are past grace
-    if (persistDir.nonEmpty)
-      dropStalePieceDirs(keep = old.map(_._1).toSet + seg)
-  }
-
-  private def dropStalePieceDirs(keep: Set[Long]): Unit =
-    persistDir.foreach { dir =>
-      val fs = fsOf(dir)
-      val root = new org.apache.hadoop.fs.Path(dir)
-      if (fs.exists(root))
-        fs.listStatus(root).foreach { st =>
-          val n = st.getPath.getName.stripPrefix("seg=").toLongOption
-          if (st.getPath.getName.startsWith("seg=") &&
-              n.exists(!keep.contains(_)))
-            fs.delete(st.getPath, true)
-        }
-    }
-
-  /** Drop cached piece and marker frames. With `vacuumStale` (the
-    * facade's WRITER close path, mirroring SegmentStore.close's vacuum
-    * — ADVICE r18 #5), piece dirs superseded by a collapse are also
-    * deleted (keep = current pieces only). Pure readers pass `false`. */
-  def release(vacuumStale: Boolean = false): Unit = {
-    if (vacuumStale && persistDir.nonEmpty)
-      dropStalePieceDirs(keep = pieces.map(_._1).toSet)
-    pieces.foreach { case (_, df) => free(df) }
-    pieces = Vector.empty
-    markers.foreach(free)
-    markers = None
-  }
-
-  /** Pieces currently live (observability for specs/probes). */
-  def pieceCount: Int = pieces.size
-
-  /** Drop the durable pieces' cached blocks so the next scan reads the
-    * parquet COLD — probe hook for gating the on-disk layout's pruning
-    * (file/row-group stats) separately from the cached view's batch
-    * stats. No-op for non-durable pieces (localCheckpoint'ed blocks are
-    * not cache-manager entries; see [[free]]'s doc). */
-  private[graft] def evictPieceCaches(): Unit =
-    pieces.foreach { case (_, df) => df.unpersist(); () }
-
-  /** Marker-table row count (observability: append-only histories must
-    * keep this at zero — the facade's shared liveness probe contract). */
-  private[graft] def markerRows: Long = markers.map(_.count()).getOrElse(0L)
+  def liveCodes: DataFrame = live(0)
 
   /** Routed serving view: the live coded state as an [[IvfPq.Index]]
     * (probed-list ADC + optional refine). Only meaningful in routed
@@ -305,39 +144,18 @@ object PqLog {
 
   private def writeModel(spark: SparkSession, dir: String,
                          st: ModelState): Unit = {
-    import spark.implicits._
     val base = modelDir(dir)
     val model = st.model
-    val cb = for {
-      s <- 0 until model.m
-      j <- model.codebooks(s).indices
-    } yield (s, j, model.codebooks(s)(j).toSeq)
-    cb.toDF("subspace", "centroid", "vec")
-      .repartition(1).write.mode("overwrite").parquet(s"$base/codebooks")
-    // rotation is train-time state like the codebooks; a rotation-less
-    // model DELETES any stale _rotation from a lost epoch (resurrecting
-    // it onto fresh codebooks would rotate queries into a space those
-    // codebooks were never trained in — the same discipline as
-    // [[Pq.write]] and [[VecLog]]'s _rot handling). In routed mode the
-    // slot holds the WHOLE-SPACE rotation (the inner model is
+    Pq.writeCodebooks(spark, s"$base/codebooks", model)
+    // rotation is train-time state like the codebooks. In routed mode
+    // the slot holds the WHOLE-SPACE rotation (the inner model is
     // rotation-free by [[IvfPq.Index]]'s own invariant).
-    st.outerRotation.orElse(model.rotation) match {
-      case Some(r) =>
-        r.zipWithIndex.map { case (row, i) => (i, row.toSeq) }.toSeq
-          .toDF("i", "vec")
-          .repartition(1).write.mode("overwrite").parquet(s"$base/rotation")
-      case None =>
-        val p = new org.apache.hadoop.fs.Path(s"$base/rotation")
-        p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          .delete(p, true)
-    }
+    Pq.writeRotation(spark, s"$base/rotation",
+      st.outerRotation.orElse(model.rotation))
     // coarse centroids are train-time state in routed mode (they define
     // what the residual codes mean); same stale-delete discipline
     st.coarse match {
-      case Some(c) =>
-        c.centroids.zipWithIndex.map { case (v, i) => (i, v.toSeq) }.toSeq
-          .toDF("cluster", "vec")
-          .repartition(1).write.mode("overwrite").parquet(s"$base/coarse")
+      case Some(c) => IvfPq.writeCoarse(spark, s"$base/coarse", c)
       case None =>
         val p = new org.apache.hadoop.fs.Path(s"$base/coarse")
         p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -354,33 +172,15 @@ object PqLog {
     val (marker, fs) = commitMarker(spark, dir)
     if (!fs.exists(marker)) return None
     val base = modelDir(dir)
-    val rows = spark.read.parquet(s"$base/codebooks")
-      .select(col("subspace"), col("centroid"), col("vec")).collect()
-    if (rows.isEmpty) return None
-    val m = rows.iterator.map(_.getInt(0)).max + 1
-    val ksub = rows.iterator.map(_.getInt(1)).max + 1
-    val codebooks = Array.ofDim[Array[Float]](m, ksub)
-    rows.foreach { r =>
-      codebooks(r.getInt(0))(r.getInt(1)) = r.getSeq[Float](2).toArray
-    }
+    val codebooks = Pq.readCodebooks(spark, s"$base/codebooks")
+    if (codebooks.isEmpty) return None
+    val (m, ksub) = (codebooks.length, codebooks(0).length)
     val met = Pq.requiredMetric(spark, base)
-    val rotP = new org.apache.hadoop.fs.Path(s"$base/rotation/_SUCCESS")
-    val rot =
-      if (rotP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-            .exists(rotP))
-        Some(spark.read.parquet(s"$base/rotation").orderBy(col("i"))
-          .collect().map(_.getSeq[Float](1).toArray))
-      else None
+    val rot = Pq.readRotation(spark, s"$base/rotation")
     val coarseP = new org.apache.hadoop.fs.Path(s"$base/coarse/_SUCCESS")
     val coarse =
-      if (coarseP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-            .exists(coarseP)) {
-        val cr = spark.read.parquet(s"$base/coarse")
-          .select(col("cluster"), col("vec")).collect()
-        val cents = Array.ofDim[Array[Float]](cr.length)
-        cr.foreach(r => cents(r.getInt(0)) = r.getSeq[Float](1).toArray)
-        Some(Kmeans.Model(cents))
-      } else None
+      if (fs.exists(coarseP)) Some(IvfPq.readCoarse(spark, s"$base/coarse"))
+      else None
     coarse match {
       case Some(_) =>
         val outer = Pq.requiredMetric(spark, base, key = "outer_metric")
@@ -495,56 +295,17 @@ object PqLog {
               else Pq.train(train, m0, ksub, maxIter, metric)
             ModelState(mod, None, None, metric)
           }
-        // invalidate every surviving piece marker BEFORE the model write:
-        // pieces still coded under the LOST codebooks must never be
-        // trusted once a new model exists (covers the instant between
-        // the codebook parquet commit and the _COMMIT withhold below)
-        segs.foreach { seg =>
-          val pm = new org.apache.hadoop.fs.Path(
-            s"$persistDir/seg=$seg/_SUCCESS")
-          pm.getFileSystem(spark.sparkContext.hadoopConfiguration)
-            .delete(pm, false)
-        }
-        // Drop any SURVIVING _COMMIT before the model write, not after:
-        // readModel can return None while an old marker still exists
-        // (empty/corrupt codebooks dataset under a committed epoch), and
-        // a crash mid-writeModel would then leave a half-written model —
-        // new codebooks beside a stale coarse/rotation dir — that the
-        // next open trusts as committed (ADVICE r15). Deleting first
-        // makes the model dir provably uncommitted for the WHOLE rewrite
-        // window; _COMMIT lands only after every piece below has been
-        // re-encoded. Until then a crash anywhere just retrains on the
-        // next open (deterministic k-means, so the wasted work is
-        // bounded and the outcome identical).
-        val (marker, fs) = commitMarker(spark, persistDir)
-        fs.delete(marker, false)
-        writeModel(spark, persistDir, fresh)
         (fresh, true)
     }
     val log = new PqLog(spark, st.model, Some(persistDir), st.coarse,
       st.outerRotation, Some(st.outerMetric))
-    // reclaim pieces of segments that no longer exist (foreign compaction)
-    log.dropStalePieceDirs(segs.toSet)
-    segs.foreach { n =>
-      // a RETRAINED model must not trust any surviving piece dir: those
-      // codes belong to a LOST quantizer (same reasoning as
-      // [[VecLog.reopen]]); re-encode everything, matzPiece overwrites
-      if (!retrained && log.hasPiece(n)) {
-        log.pieces :+= ((n, spark.read.parquet(log.pieceDir(n)).persist()))
-      } else {
-        val frame = segVec(n)
-        if (frame.columns.contains("vector")) {
-          val rows = frame.filter(col("vector").isNotNull)
-          log.pieces :+= ((n, log.matzPiece(n, log.code(rows))))
-        }
-      }
-    }
-    log.markers = markers.map(log.matz)
-    if (retrained) {
-      // every piece is now coded under the new model — commit it
-      val (marker, fs) = commitMarker(spark, persistDir)
-      fs.create(marker, true).close()
-    }
+    // a RETRAINED model must not trust any surviving piece dir: those
+    // codes belong to LOST codebooks; the model's _COMMIT is dropped
+    // before the write and withheld until every piece is re-encoded
+    log.load(segs, segVec, markers,
+      if (!retrained) None
+      else Some((commitMarker(spark, persistDir)._1,
+        () => writeModel(spark, persistDir, st))))
     log
   }
 }

@@ -22,11 +22,10 @@ import org.apache.spark.sql.functions._
   *   - each segment's vectors become one materialized ASSIGNED piece
   *     `(id, vector, cluster)` — a codegen nearest-centroid projection at
   *     batch cost, durable as parquet when `persistDir` is set;
-  *   - newest-wins `(id, upto)` markers (same delete-marker ordering as
-  *     SegmentStore.read) mask replaced/deleted instances — a delete
-  *     costs a marker row, never an anti-join rewrite.
+  *   - pieces, newest-wins markers, collapse and the retrain commit
+  *     sequence are the shared [[graft.core.PieceLog]] protocol.
   *
-  * [[leg]] exposes the live view as a ready `Ivf.Index`; at probe-all the
+  * [[index]] exposes the live view as a ready `Ivf.Index`; at probe-all the
   * search is exhaustive-exact, so the incremental state is
   * oracle-equivalent to a flat scan over the live vectors under ANY
   * mutation history. NOT thread-safe; guard with the owning store's lock.
@@ -34,35 +33,15 @@ import org.apache.spark.sql.functions._
 final class VecLog private (spark: SparkSession, val model: Kmeans.Model,
                             val metric: Metric,
                             persistDir: Option[String],
-                            val rotation: Option[Array[Array[Float]]] = None) {
+                            val rotation: Option[Array[Array[Float]]] = None)
+    extends graft.core.PieceLog(spark, persistDir) {
 
-  // (segment id, assigned(id, vector, cluster)) — materialized
-  private var pieces: Vector[(Long, DataFrame)] = Vector.empty
-  private var markers: Option[DataFrame] = None
+  def name: String = "vec"
+  protected def column: String = "vector"
+  protected def tables: IndexedSeq[String] = IndexedSeq("")
 
-  private def matz(df: DataFrame): DataFrame = df.localCheckpoint(true)
-
-  /** Free the cached blocks behind a frame this log materialized.
-    * Durable pieces are `.persist()`ed parquet reads (cache-manager
-    * unpersist); non-durable pieces and EVERY marker/scratch frame are
-    * `localCheckpoint`ed, whose blocks only the ContextCleaner would
-    * eventually reclaim — a long-lived in-memory store with churn
-    * accumulates them (ADVICE r15), so the checkpointed RDD is
-    * unpersisted explicitly. */
-  private def free(df: DataFrame): Unit = graft.core.Frames.free(df)
-
-  private def fsOf(path: String) = new org.apache.hadoop.fs.Path(path)
-    .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private def pieceDir(seg: Long): String = s"${persistDir.get}/seg=$seg"
-
-  private def hasPiece(seg: Long): Boolean = persistDir.exists { _ =>
-    fsOf(pieceDir(seg)).exists(
-      new org.apache.hadoop.fs.Path(s"${pieceDir(seg)}/_SUCCESS"))
-  }
-
-  private def assign(batch: DataFrame): DataFrame = {
-    val prepped = Pq.prepData(batch.select(col("id").cast("long").as("id"),
+  protected def encode(rows: DataFrame): IndexedSeq[DataFrame] = {
+    val prepped = Pq.prepData(rows.select(col("id").cast("long").as("id"),
       col("vector")), metric)
     // OPQ composition point (mirrors IvfPq.buildOpq): the coarse
     // quantizer was trained in the ROTATED space, so assignment routes
@@ -75,35 +54,16 @@ final class VecLog private (spark: SparkSession, val model: Kmeans.Model,
       case None => graft.expr.CentroidKernels.nearestCentroid(
         col("vector"), model.centroids)
     }
-    prepped.withColumn("cluster", routed)
+    IndexedSeq(prepped.withColumn("cluster", routed))
   }
 
-  private def matzPiece(seg: Long, assigned: DataFrame): DataFrame =
-    persistDir match {
-      case Some(_) =>
-        assigned.write.mode("overwrite").parquet(pieceDir(seg))
-        spark.read.parquet(pieceDir(seg)).persist()
-      case None => matz(assigned)
-    }
-
-  private def emptyAssigned: DataFrame = {
+  protected def empty(i: Int): DataFrame = {
     import spark.implicits._
     Seq.empty[(Long, Array[Float], Int)].toDF("id", "vector", "cluster")
   }
 
   /** Live assigned view: union of pieces, newest-wins via markers. */
-  def liveAssigned: DataFrame = {
-    if (pieces.isEmpty) return emptyAssigned
-    val tagged = graft.core.Frames.balancedUnion(
-      pieces.map { case (seg, df) => df.withColumn("_seg", lit(seg)) })
-    markers match {
-      case Some(m) =>
-        tagged.join(m, Seq("id"), "left")
-          .filter(col("upto").isNull || col("_seg") > col("upto"))
-          .drop("_seg", "upto")
-      case None => tagged.drop("_seg")
-    }
-  }
+  def liveAssigned: DataFrame = live(0)
 
   /** The live state as a servable IVF index (probe-all = exhaustive).
     *
@@ -122,146 +82,11 @@ final class VecLog private (spark: SparkSession, val model: Kmeans.Model,
       Kmeans.Model(model.centroids.map(c => Pq.applyRotationT(r, c)))
     case None => model
   }
-
-  private def applyRemoval(ids: DataFrame, upto: Long,
-                           liveHit: Option[Boolean]): Unit = {
-    // the owning facade's SHARED verdict (one probe per mutation, not
-    // one per leg — VERDICT r15): false is EXACT (the probed superset —
-    // raw store segment ids — held no instance, so this leg holds none
-    // either) and skips with zero jobs; true is a SUPERSET verdict (the
-    // instance found may be masked or vector-less here), so the marker
-    // written below may mask nothing — harmless: markers only act on
-    // matching piece rows from segments <= upto
-    if (liveHit.contains(false)) return
-    val del = matz(ids.select(col("id").cast("long").as("id")).distinct())
-    // unshared path: marker only when something live is actually masked
-    // (append-only workloads keep the marker table empty) — probe the
-    // cached piece id columns, a pruned scan
-    val hit = liveHit.getOrElse(liveAssigned.select(col("id"))
-      .join(del, Seq("id"), "left_semi").limit(1).count() > 0)
-    if (hit) {
-      val add = del.withColumn("upto", lit(upto))
-      val old = markers
-      markers = Some(matz(markers.fold(add)(_.unionByName(add))
-        .groupBy(col("id")).agg(max(col("upto")).as("upto"))))
-      // the new frame is eagerly materialized, so the superseded one's
-      // checkpoint blocks are dead weight from here on
-      old.foreach(free)
-    }
-    free(del)
-  }
-
-  /** Fold one appended segment in at BATCH cost: assignment projection +
-    * marker maintenance, no retrain, no corpus rewrite. `liveHit` is the
-    * owning facade's shared replacement-probe verdict (see
-    * [[applyRemoval]]); standalone callers leave it None. */
-  def append(batch: DataFrame, seg: Long,
-             liveHit: Option[Boolean] = None): Unit = {
-    // Idempotent per segment: a concurrent first search can seed the log
-    // (reopen covers every store segment, including one whose writer has
-    // flushed but not yet folded) between the store write and this fold —
-    // folding it AGAIN would duplicate its assigned rows. A vector-less
-    // batch leaves no piece, but its removal probe below is masked-aware
-    // and re-applies as a no-op, so the piece check alone is sufficient.
-    if (pieces.exists(_._1 == seg)) return
-    applyRemoval(batch.select(col("id")), upto = seg - 1, liveHit)
-    if (batch.columns.contains("vector")) {
-      val rows = batch.filter(col("vector").isNotNull)
-      val p = matzPiece(seg, assign(rows))
-      pieces :+= ((seg, p))
-    }
-  }
-
-  def delete(ids: DataFrame, upto: Long,
-             liveHit: Option[Boolean] = None): Unit =
-    applyRemoval(ids, upto, liveHit)
-
-  /** Post-compaction collapse to one piece under the compacted segment
-    * id; markers reset; centroids untouched (train-time state, like the
-    * reference's Flush). */
-  def collapse(seg: Long): Unit = {
-    val old = pieces
-    val oldMarkers = markers
-    val p = matzPiece(seg, liveAssigned)
-    pieces = Vector((seg, p))
-    markers = None
-    // free superseded frames in BOTH modes — non-durable pieces are
-    // checkpoint blocks the ContextCleaner would otherwise sit on
-    // (durable pieces only lose their cache here: an in-flight search
-    // frame recomputes from the parquet, which survives one cycle below)
-    old.foreach { case (_, df) => free(df) }
-    oldMarkers.foreach(free)
-    // one-cycle deferral, mirroring SegmentStore's retirement manifests:
-    // the JUST-superseded piece dirs stay on disk so a search frame
-    // planned before this compaction still collects; anything older
-    // (the previous collapse's retirees, crash leftovers) is past its
-    // grace window and deleted now
-    if (persistDir.nonEmpty)
-      dropStalePieceDirs(keep = old.map(_._1).toSet + seg)
-  }
-
-  private def dropStalePieceDirs(keep: Set[Long]): Unit =
-    persistDir.foreach { dir =>
-      val fs = fsOf(dir)
-      val root = new org.apache.hadoop.fs.Path(dir)
-      if (fs.exists(root))
-        fs.listStatus(root).foreach { st =>
-          val n = st.getPath.getName.stripPrefix("seg=").toLongOption
-          if (st.getPath.getName.startsWith("seg=") &&
-              n.exists(!keep.contains(_)))
-            fs.delete(st.getPath, true)
-        }
-    }
-
-  /** Drop cached piece and marker frames. With `vacuumStale` (the
-    * facade's WRITER close path, mirroring SegmentStore.close's vacuum
-    * — ADVICE r18 #5), piece dirs superseded by a collapse are also
-    * deleted (keep = current pieces only): without it a store closed
-    * after one compaction leaves the one-cycle-deferred dirs on disk
-    * until some future process compacts again. Pure readers pass
-    * `false` — deleting shared bytes is the owner's call. */
-  def release(vacuumStale: Boolean = false): Unit = {
-    if (vacuumStale && persistDir.nonEmpty)
-      dropStalePieceDirs(keep = pieces.map(_._1).toSet)
-    pieces.foreach { case (_, df) => free(df) }
-    pieces = Vector.empty
-    markers.foreach(free)
-    markers = None
-  }
-
-  /** Pieces currently live (observability for specs/probes). */
-  def pieceCount: Int = pieces.size
-
-  /** Marker-table row count (observability: append-only histories must
-    * keep this at zero — the facade's shared liveness probe contract). */
-  private[graft] def markerRows: Long = markers.map(_.count()).getOrElse(0L)
 }
 
 object VecLog {
   private def modelDir(dir: String) = s"$dir/_model"
   private def rotDir(dir: String) = s"$dir/_rot"
-
-  private def modelMarker(spark: SparkSession, dir: String) = {
-    val p = new org.apache.hadoop.fs.Path(s"${modelDir(dir)}/_SUCCESS")
-    (p, p.getFileSystem(spark.sparkContext.hadoopConfiguration))
-  }
-
-  private def writeRot(spark: SparkSession, dir: String,
-                       r: Array[Array[Float]]): Unit = {
-    import spark.implicits._
-    r.zipWithIndex.map { case (row, i) => (i, row.toSeq) }.toSeq
-      .toDF("i", "vec")
-      .repartition(1).write.mode("overwrite").parquet(rotDir(dir))
-  }
-
-  private def readRot(spark: SparkSession,
-                      dir: String): Option[Array[Array[Float]]] = {
-    val p = new org.apache.hadoop.fs.Path(s"${rotDir(dir)}/_SUCCESS")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return None
-    Some(spark.read.parquet(rotDir(dir)).orderBy(col("i"))
-      .collect().map(_.getSeq[Float](1).toArray))
-  }
 
   /** The train-time preprocessing space a metric implies. Metrics in the
     * same space share centroids and assigned pieces: the cosine family
@@ -331,7 +156,7 @@ object VecLog {
         // silently route queries through centroids trained in a space
         // the configuration does not expect, so the mismatch throws
         // exactly like the metric-space guard above
-        val persistedRot = readRot(spark, persistDir)
+        val persistedRot = Pq.readRotation(spark, rotDir(persistDir))
         if (opq && persistedRot.isEmpty)
           throw new IllegalStateException(
             s"incremental vector log at $persistDir was trained WITHOUT " +
@@ -361,72 +186,23 @@ object VecLog {
           case None => prepped
         }
         val m = Kmeans.train(trainData, nlist, maxIter)
-        // Rotation FIRST (train-time state, read only once the model
-        // marker commits); a rotation-less retrain must DELETE any stale
-        // _rot from a lost epoch — resurrecting it onto fresh centroids
-        // would route queries through a space they were never trained in.
-        newRot match {
-          case Some(r) => writeRot(spark, persistDir, r)
-          case None =>
-            val p = new org.apache.hadoop.fs.Path(rotDir(persistDir))
-            p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-              .delete(p, true)
-        }
-        // Invalidate every surviving piece marker BEFORE the model write:
-        // pieces still assigned under the LOST quantizer must never be
-        // trusted once a new model exists. This covers the instant where
-        // writeModel's parquet commit creates _model/_SUCCESS before the
-        // withhold below deletes it — without it, a crash inside that
-        // instant would leave a committed model over stale pieces (the
-        // silently-mixed-quantizer failure, ADVICE r13).
-        segs.foreach { seg =>
-          val pm = new org.apache.hadoop.fs.Path(
-            s"$persistDir/seg=$seg/_SUCCESS")
-          pm.getFileSystem(spark.sparkContext.hadoopConfiguration)
-            .delete(pm, false)
-        }
-        // Write the model UNCOMMITTED — its _SUCCESS is withheld until
-        // every piece below has been reassigned (committed at the end of
-        // reopen). Committing first would open a crash window where the
-        // next reopen reads the new model (retrained = false) and trusts
-        // surviving piece dirs still assigned under the LOST quantizer —
-        // the silently-mixed-quantizer failure the retrained-flag
-        // reassignment exists to close. Until the marker lands, a crash
-        // anywhere in the reassignment loop just retrains on the next
-        // open (deterministic k-means, so the wasted work is bounded and
-        // the outcome identical).
-        writeModel(spark, persistDir, m, metric)
-        val (marker, fs) = modelMarker(spark, persistDir)
-        fs.delete(marker, false)
         (m, metric, newRot, true)
     }
     val log = new VecLog(spark, model, met, Some(persistDir), rot)
-    // reclaim pieces of segments that no longer exist (foreign compaction)
-    log.dropStalePieceDirs(segs.toSet)
-    segs.foreach { n =>
-      // a RETRAINED model (no readable artifact — first open, or a crash
-      // left _model without its _SUCCESS) must not trust any surviving
-      // piece dir: those assignments belong to a LOST quantizer, and the
-      // live view may have changed since, so the retrained centroids can
-      // differ — loading them would silently mix two coarse quantizers
-      // over one store (the exact failure the metric guard above exists
-      // for). Reassign everything; matzPiece overwrites the stale dirs.
-      if (!retrained && log.hasPiece(n)) {
-        log.pieces :+= ((n, spark.read.parquet(log.pieceDir(n)).persist()))
-      } else {
-        val frame = segVec(n)
-        if (frame.columns.contains("vector")) {
-          val rows = frame.filter(col("vector").isNotNull)
-          log.pieces :+= ((n, log.matzPiece(n, log.assign(rows))))
-        }
-      }
-    }
-    log.markers = markers.map(log.matz)
-    if (retrained) {
-      // every piece is now assigned under the new model — commit it
-      val (marker, fs) = modelMarker(spark, persistDir)
-      fs.create(marker, true).close()
-    }
+    // a RETRAINED model (no readable artifact — first open, or a crash
+    // left _model without its _SUCCESS) must not trust any surviving
+    // piece dir: those assignments belong to a LOST quantizer, and
+    // trusting them would silently mix two coarse quantizers over one
+    // store. The rotation is written with the model: it is read only
+    // once the model marker commits.
+    val commit =
+      new org.apache.hadoop.fs.Path(s"${modelDir(persistDir)}/_SUCCESS")
+    log.load(segs, segVec, markers,
+      if (!retrained) None
+      else Some((commit, () => {
+        Pq.writeRotation(spark, rotDir(persistDir), rot)
+        writeModel(spark, persistDir, model, metric)
+      })))
     log
   }
 
