@@ -3,7 +3,7 @@ package graft.hybrid
 import graft.filter.{FilterGroup, Filters}
 import graft.fusion.Fusion
 import graft.text.{BM25, BM25Corpus}
-import graft.vector.{FlatKnn, Hnsw, Ivf, IvfPq, Kmeans, Metric, Pq}
+import graft.vector.{FlatKnn, Hnsw, IdSet, Ivf, IvfPq, Kmeans, Metric, Pq}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -64,8 +64,9 @@ object Hybrid {
   final case class FlatLeg(vectors: DataFrame) extends VectorLeg
   /** IVF partition pruning; `nprobe <= 0` probes all lists (exact). */
   final case class IvfLeg(index: Ivf.Index, nprobe: Int = 0) extends VectorLeg
-  /** Per-shard beam search; approximate (widen `efSearch` under selective
-    * filters — traversal is unfiltered, doc on [[Hnsw.searchIndex]]). */
+  /** Per-shard beam search; approximate. A filter leaving a shard fewer
+    * live candidates than the beam width is scored exactly there (doc on
+    * [[Hnsw.searchIndex]]). */
   final case class HnswLeg(index: Hnsw.Index, efSearch: Int = 200)
       extends VectorLeg
   /** ADC scan over PQ codes; approximate (quantization error). */
@@ -365,13 +366,14 @@ object Hybrid {
     // filter from precomputed roaring bitmaps (metadata_index.go:579-698),
     // not by rescanning every document per query — the embedded analog
     // evaluates a DISTINCT filter once over the meta rows and memoizes the
-    // matching ids as a sorted primitive array (binary-search membership,
-    // no per-id boxing). Repeated filters — the serving-path norm — then
-    // cost one lookup instead of a 1M-row scan per search.
+    // matching ids as an [[IdSet]] (one sorted primitive array,
+    // binary-search membership, no per-id boxing). Repeated filters — the
+    // serving-path norm — then cost one lookup instead of a 1M-row scan
+    // per search.
     private val candCache =
-      new java.util.concurrent.ConcurrentHashMap[Seq[FilterGroup], Array[Long]]()
+      new java.util.concurrent.ConcurrentHashMap[Seq[FilterGroup], IdSet]()
 
-    private def candidatesFor(filters: Seq[FilterGroup]): Array[Long] = {
+    private def candidatesFor(filters: Seq[FilterGroup]): IdSet = {
       // bound the memo: a workload cycling through unbounded DISTINCT
       // filters must not grow driver memory without limit — dropping the
       // cache only costs the next query its one evaluation pass
@@ -394,21 +396,19 @@ object Hybrid {
           if (Filters.matchesGroups(fs, get)) b += metaIds(i)
           i += 1
         }
-        val arr = b.result()
-        java.util.Arrays.sort(arr)
-        arr
+        IdSet(b.result())
       })
     }
 
     def search(filters: Seq[FilterGroup], qvec: Option[Array[Float]],
                qtext: Option[String]): Seq[(Long, Double)] = {
-      val candidates: Option[Array[Long]] =
+      val candidates: Option[IdSet] =
         if (filters.isEmpty) None else Some(candidatesFor(filters))
       // empty candidate set short-circuits (hybrid_search_index.go:503-506)
       if (candidates.exists(_.isEmpty)) return Seq.empty
-      val pred: Long => Boolean = candidates
-        .map(c => (id: Long) => java.util.Arrays.binarySearch(c, id) >= 0)
-        .orNull
+      // the set itself is the predicate: the HNSW leg reads its ids to
+      // score small sets exactly, every other leg just calls it
+      val pred: Long => Boolean = candidates.orNull
 
       // a query for an absent modality contributes nothing — the
       // distributed path's semantics (searchWith scores a modality only
@@ -429,7 +429,7 @@ object Hybrid {
           // metadata-only: candidates score 1.0, ties reduce to id asc
           // (hybrid_search_index.go:588-593); with no filters either, the
           // reference returns EMPTY (:594-600) — mirror the distributed path
-          candidates.map(_.take(cfg.k).toSeq.map(id => (id, 1.0))) // pre-sorted
+          candidates.map(_.ids.take(cfg.k).toSeq.map(id => (id, 1.0))) // pre-sorted
             .getOrElse(Seq.empty)
       }
       // final order: score DESC, id asc, limit k (:595-612)
@@ -459,10 +459,13 @@ object Hybrid {
 
   /** Embedded hybrid over an HNSW-served vector leg — the reference's
     * any-index in-process hybrid (hybrid_search_index.go:76 composes any
-    * VectorIndex). Approximate per the
-    * index: widen `efSearch` under selective filters (the graph beam
-    * traverses unfiltered, doc on [[Hnsw.searchIndex]]). The metric is the
-    * INDEX's (fail-fast mismatch, same rule as the distributed legs). */
+    * VectorIndex). Filtered queries hand the leg the filter's [[IdSet]]:
+    * each shard holding fewer live candidates than the beam width
+    * `max(efSearch, k)` scores them exactly, so selective filters get the
+    * exact filtered top-k; larger sets are checked inside the beam, which
+    * is approximate per the index (doc on [[Hnsw.searchIndex]]). The
+    * metric is the INDEX's (fail-fast mismatch, same rule as the
+    * distributed legs). */
   def serveHnsw(meta: DataFrame, index: Hnsw.Index, corpus: BM25Corpus,
                 cfg: Config = Config(),
                 efSearch: Int = Hnsw.DefaultEfSearch): LocalHybrid = {

@@ -391,7 +391,8 @@ object Hnsw {
     }
 
     /** Cumulative QUERY-side distance evaluations (every [[distQ]]
-      * dispatch — greedy descent + beam; build-path [[distNN]] excluded):
+      * dispatch — greedy descent, beam, or the exact scan of a small
+      * candidate set; build-path [[distNN]] excluded):
       * the deterministic "graph regime" observable. A beam search
       * evaluates O(ef·M·layers) distances; a degenerate scan evaluates
       * the corpus — so a per-query delta orders of magnitude under the
@@ -610,8 +611,10 @@ object Hnsw {
 
     /** @param allowed optional doc-id predicate (comet WithDocumentIDs,
       *                 hnsw_index_search.go:322-325); deleted nodes are
-      *                 always excluded. Traversal is unfiltered — widen
-      *                 `efSearch` for selective filters. */
+      *                 always excluded. An [[IdSet]] with fewer live
+      *                 members in this shard than the beam width is scored
+      *                 exactly (see [[searchHeap]]); any other predicate
+      *                 gates results inside an unfiltered beam. */
     def search(q: Array[Float], k: Int, efSearch: Int,
                allowed: Long => Boolean = null): Seq[(Long, Double)] =
       searchHeap(q, k, efSearch, allowed).sortedEntries
@@ -619,9 +622,18 @@ object Hnsw {
 
     /** [[search]]'s selection as a primitive (L2², doc id) bounded heap —
       * no per-result tuple boxing; the embedded serving merge absorbs these
-      * directly. Selection is IDENTICAL to [[search]] (first k of the beam's
-      * sorted output); only the k survivors are re-ordered by (dist, doc id)
-      * instead of beam order, which every caller re-sorts anyway. */
+      * directly. Results are ordered by (distance, doc id).
+      *
+      * Two regimes, chosen per shard. When `allowed` is an [[IdSet]] and
+      * this shard holds FEWER live members of it than the beam width
+      * `max(efSearch, k)`, those members are scored exactly with the same
+      * [[distQ]] kernel and the beam is skipped: a beam over so few
+      * admitted nodes can never fill and stop early, so it would walk the
+      * whole layer-0 component anyway. The exact answer equals the beam's
+      * whenever the admitted nodes are reachable, and is never worse.
+      * Otherwise the beam runs and its first k are kept. At a distance tie
+      * on the cut the exact path keeps the smaller doc id; the beam keeps
+      * the smaller internal node index. */
     private[vector] def searchHeap(q: Array[Float], k: Int, efSearch: Int,
                                    allowed: Long => Boolean = null): FlatKnn.BoundedTopK = {
       // k <= 0 = all the BEAM found (limiter.go:12-17 sanitizes k at the
@@ -630,8 +642,21 @@ object Hnsw {
       // (a k>ef search must be able to fill k)
       val kk = if (k <= 0) ids.length else k
       val beamK = if (k <= 0) efSearch else k
+      val width = math.max(efSearch, beamK)
       val heap = new FlatKnn.BoundedTopK(kk)
       if (entry < 0) return heap
+      val few = allowed match {
+        case c: IdSet => liveMembers(c, width)
+        case _        => null
+      }
+      if (few != null) {
+        var i = 0
+        while (i < few.length) {
+          heap.offer(distQ(q, few(i)), ids(few(i)))
+          i += 1
+        }
+        return heap
+      }
       val pred: Int => Boolean =
         if (allowed == null && deleted.isEmpty) null
         else i => !deleted.contains(i) && (allowed == null || allowed(ids(i)))
@@ -643,8 +668,7 @@ object Hnsw {
         ep = r._1; epD = r._2
         layer -= 1
       }
-      val res = searchLayer(q, Array(ep), Array(epD),
-        math.max(efSearch, beamK), 0, pred)
+      val res = searchLayer(q, Array(ep), Array(epD), width, 0, pred)
       val sorted = res.sortedPairs
       var i = 0
       while (i < sorted.length && i < kk) {
@@ -652,6 +676,38 @@ object Hnsw {
         i += 1
       }
       heap
+    }
+
+    /** Internal indexes of this shard's live nodes whose doc ids are in
+      * `c`, or null once `limit` of them are found. Walks the smaller side
+      * — the candidate ids through [[idIndex]], or the shard's nodes by
+      * binary search in `c` — so the probe costs at most
+      * min(|c|, shard size) lookups and stops early on a large set. */
+    private def liveMembers(c: IdSet, limit: Int): Array[Int] = {
+      val out = new Array[Int](math.min(limit, math.min(c.size, ids.length)))
+      var n = 0
+      if (c.size <= ids.length) {
+        val cs = c.ids
+        var j = 0
+        while (j < cs.length) {
+          val i = idIndex.getOrElse(cs(j), -1)
+          if (i >= 0 && !deleted.contains(i)) {
+            if (n >= limit - 1) return null // i is the limit-th member
+            out(n) = i; n += 1
+          }
+          j += 1
+        }
+      } else {
+        var i = 0
+        while (i < ids.length) {
+          if (!deleted.contains(i) && c(ids(i))) {
+            if (n >= limit - 1) return null // i is the limit-th member
+            out(n) = i; n += 1
+          }
+          i += 1
+        }
+      }
+      if (n == out.length) out else java.util.Arrays.copyOf(out, n)
     }
 
     /** Soft delete by doc id: the node keeps routing traffic but never
@@ -814,12 +870,15 @@ object Hnsw {
     case _             => math.sqrt(s)
   }
 
-  /** Hard cap on a broadcastable candidate set (~32 MB of ids). The HNSW
-    * document filter is an in-memory id set checked inside the beam — the
-    * same contract as the reference's WithDocumentIDs, which also takes an
-    * explicit in-memory id list. Corpus-scale filters belong on the IVF or
-    * flat paths, where the candidate restriction is a distributed
-    * semi-join; failing fast here beats a silent driver OOM. */
+  /** Hard cap on a broadcastable candidate set: 4M ids, 32 MB as the
+    * broadcast [[IdSet]]'s primitive array. The HNSW document filter is an
+    * in-memory id set — the same contract as the reference's
+    * WithDocumentIDs, which also takes an explicit in-memory id list — and
+    * each shard either scores its few live members exactly or checks the
+    * set inside the beam (see [[LocalGraph.searchHeap]]). Corpus-scale
+    * filters belong on the IVF or flat paths, where the candidate
+    * restriction is a distributed semi-join; failing fast here beats a
+    * silent driver OOM. */
   val MaxBroadcastCandidates: Int = 4 << 20
 
   def build(data: DataFrame, m: Int = 16, efConstruction: Int = 200,
@@ -854,10 +913,15 @@ object Hnsw {
     *                   after [[convertScore]] (hnsw_index_search.go:327-329)
     * @param candidates optional (id) frame restricting results (comet
     *                   WithDocumentIDs, hnsw_index_search.go:322-325) — the
-    *                   id set is collected and broadcast, checked inside
-    *                   each shard's beam (the reference's filter is the
-    *                   same in-memory id set); traversal stays unfiltered,
-    *                   so widen `efSearch` for very selective filters
+    *                   ids are collected and broadcast as one [[IdSet]]
+    *                   (the reference's filter is the same in-memory id
+    *                   set). A shard holding fewer live candidates than
+    *                   the beam width `max(efSearch, k)` scores them
+    *                   exactly, so a selective filter returns the exact
+    *                   filtered top-k; a larger set is checked inside the
+    *                   shard's unfiltered beam. Embedded
+    *                   [[LocalServing.search]] with the same [[IdSet]]
+    *                   takes the same path, row for row.
     */
   def searchIndex(index: Index, queries: DataFrame, k: Int,
                   efSearch: Int = DefaultEfSearch,
@@ -876,13 +940,12 @@ object Hnsw {
       require(arr.length <= MaxBroadcastCandidates,
         s"HNSW candidate set exceeds $MaxBroadcastCandidates ids; " +
           "route corpus-scale filters through IVF or flat search " +
-          "(distributed semi-join) instead of the in-beam id set")
-      spark.sparkContext.broadcast(arr.map(_.getLong(0)).toSet)
+          "(distributed semi-join) instead of the broadcast id set")
+      spark.sparkContext.broadcast(IdSet(arr.map(_.getLong(0))))
     }
     import spark.implicits._
     val hits = index.graphs.flatMap { g =>
-      val allowed: Long => Boolean =
-        bcCand.map(b => b.value.contains _).orNull
+      val allowed: Long => Boolean = bcCand.map(_.value).orNull
       bcQ.value.iterator.flatMap { case (qid, qv) =>
         g.searchHeap(qv, k, ef, allowed).sortedEntries
           .map { case (s, id) => (qid, id, convertScore(metric, s)) }
@@ -913,6 +976,11 @@ object Hnsw {
       * (see LocalGraph.distEvalCount) — the structural per-query work
       * observable the 10M serve gate reads instead of wall clock. */
     def distEvals: Long = graphs.map(_.distEvalCount).sum
+
+    /** Top-k over every shard, ordered by (score, id). `allowed` restricts
+      * results: an [[IdSet]] is scored exactly in each shard holding fewer
+      * live members than the beam width (as in [[searchIndex]]); any other
+      * predicate gates results inside the beam. */
     def search(q: Array[Float], k: Int, efSearch: Int = DefaultEfSearch,
                allowed: Long => Boolean = null): Seq[(Long, Double)] = {
       val ef = if (efSearch <= 0) DefaultEfSearch else efSearch
