@@ -1432,7 +1432,7 @@ object ScaleProbe {
       // same ranking the serving path uses (store metric is L2: query
       // prep is identity; no OPQ in this leg)
       val qArr = qvP.select(col("qvec")).head().getSeq[Float](0).toArray
-      val probedSet = idxR2.coarse.ranked(qArr).take(8).toSet
+      val probedSet = idxR2.coarse.ranked(qArr, 8).toSet
       val probedMass = idxR2.encoded
         .groupBy(col("cluster")).count().collect()
         .filter(r => probedSet(r.getInt(0))).map(_.getLong(1)).sum

@@ -839,7 +839,7 @@ object SparkEntry {
       val raw = emb(s, dir).filter(col("id").isin(idSet: _*))
         .select(col("id").cast("long"), col("vector")).collect()
         .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray).toMap
-      val probed = idx.coarse.ranked(qv).take(4).toSet
+      val probed = idx.coarse.ranked(qv, 4).toSet
       // (a) stored cluster == independent nearest-centroid assignment
       val nCluster = res.count { case (id, _) =>
         stored(id)._1 == idx.coarse.nearest(raw(id)) }

@@ -145,22 +145,51 @@ object Filters {
 
   // --------------------------------------------- local (embedded) evaluator
 
-  /** Three-way compare with SQL null semantics: None when either side is
-    * null or the types are incomparable. Integral pairs compare as long,
+  /** [[cmp]]'s "no comparison" result. No comparator it calls returns it:
+    * number and Boolean compares return -1/0/1, and `String.compareTo`
+    * returns a char or length difference. */
+  private final val NoCmp = Int.MinValue
+
+  private def integral(v: Any): Boolean = v.isInstanceOf[java.lang.Long] ||
+    v.isInstanceOf[java.lang.Integer] || v.isInstanceOf[java.lang.Short] ||
+    v.isInstanceOf[java.lang.Byte]
+
+  /** Three-way compare with SQL null semantics: [[NoCmp]] when either side
+    * is null or the types are incomparable. Integral pairs compare as long,
     * any other numeric pair as double — matching Catalyst's promotion for
-    * the types a metadata row can carry. */
-  private def cmp(a: Any, b: Any): Option[Int] = (a, b) match {
-    case (null, _) | (_, null) => None
-    case (x: java.lang.Number, y: java.lang.Number) =>
-      val integral = (v: Any) => v.isInstanceOf[java.lang.Byte] ||
-        v.isInstanceOf[java.lang.Short] || v.isInstanceOf[java.lang.Integer] ||
-        v.isInstanceOf[java.lang.Long]
-      if (integral(x) && integral(y))
-        Some(java.lang.Long.compare(x.longValue(), y.longValue()))
-      else Some(java.lang.Double.compare(x.doubleValue(), y.doubleValue()))
-    case (x: String, y: String)   => Some(x.compareTo(y))
-    case (x: Boolean, y: Boolean) => Some(x.compareTo(y))
-    case _                        => None
+    * the types a metadata row can carry. Allocation-free: it runs once per
+    * row and filter on a memo miss. */
+  private def cmp(a: Any, b: Any): Int = a match {
+    case null => NoCmp
+    case x: java.lang.Number => b match {
+      case y: java.lang.Number =>
+        if (integral(x) && integral(y))
+          java.lang.Long.compare(x.longValue(), y.longValue())
+        else java.lang.Double.compare(x.doubleValue(), y.doubleValue())
+      case _ => NoCmp
+    }
+    case x: String => b match {
+      case y: String => x.compareTo(y)
+      case _         => NoCmp
+    }
+    case x: java.lang.Boolean => b match {
+      case y: java.lang.Boolean => x.compareTo(y)
+      case _                    => NoCmp
+    }
+    case _ => NoCmp
+  }
+
+  // NoCmp is below every real result, so only the tests that accept a
+  // negative result must exclude it
+  private def isEq(c: Int): Boolean = c == 0
+  private def isNe(c: Int): Boolean = c != 0 && c != NoCmp
+  private def isLt(c: Int): Boolean = c < 0 && c != NoCmp
+  private def isLe(c: Int): Boolean = c <= 0 && c != NoCmp
+
+  private def anyEq(x: Any, vs: Seq[Any]): Boolean = {
+    val it = vs.iterator
+    while (it.hasNext) if (isEq(cmp(x, it.next()))) return true
+    false
   }
 
   /** Evaluate ONE filter against a local row — the embedded-serving twin of
@@ -170,29 +199,27 @@ object Filters {
     * field value or null. Spec-pinned equal to the compiled Column in
     * FiltersSpec. */
   def matchesLocal(f: Filter, get: String => Any): Boolean = f match {
-    case Eq(c, v)         => cmp(get(c), v).contains(0)
-    case Ne(c, v)         => cmp(get(c), v).exists(_ != 0)
-    case Gt(c, v)         => cmp(get(c), v).exists(_ > 0)
-    case Gte(c, v)        => cmp(get(c), v).exists(_ >= 0)
-    case Lt(c, v)         => cmp(get(c), v).exists(_ < 0)
-    case Lte(c, v)        => cmp(get(c), v).exists(_ <= 0)
+    case Eq(c, v)         => isEq(cmp(get(c), v))
+    case Ne(c, v)         => isNe(cmp(get(c), v))
+    case Gt(c, v)         => cmp(get(c), v) > 0
+    case Gte(c, v)        => cmp(get(c), v) >= 0
+    case Lt(c, v)         => isLt(cmp(get(c), v))
+    case Lte(c, v)        => isLe(cmp(get(c), v))
     case Between(c, a, b) =>
       val x = get(c)
-      cmp(x, a).exists(_ >= 0) && cmp(x, b).exists(_ <= 0)
-    case In(c, vs)        => vs.exists(v => cmp(get(c), v).contains(0))
+      cmp(x, a) >= 0 && isLe(cmp(x, b))
+    case In(c, vs)        => anyEq(get(c), vs)
     case NotIn(c, vs)     =>
       val x = get(c)
-      x == null || !vs.exists(v => cmp(x, v).contains(0))
+      x == null || !anyEq(x, vs)
     case Exists(c)        => get(c) != null
     case NotExists(c)     => get(c) == null
     case AnyIn(c, vs)     => get(c) match {
-      case s: scala.collection.Seq[_] =>
-        s.exists(e => vs.exists(v => cmp(e, v).contains(0)))
+      case s: scala.collection.Seq[_] => s.exists(anyEq(_, vs))
       case _ => false
     }
     case NoneIn(c, vs)    => get(c) match {
-      case s: scala.collection.Seq[_] =>
-        !s.exists(e => vs.exists(v => cmp(e, v).contains(0)))
+      case s: scala.collection.Seq[_] => !s.exists(anyEq(_, vs))
       case _ => true // missing list qualifies, like NotIn
     }
     case Not(inner)       => inner match {

@@ -324,16 +324,55 @@ object Hybrid {
     v.flatMap { case (id, a) => tm.get(id).map(b => (id, math.min(a, b))) }
   }
 
+  /** Entries per generation of [[LocalHybrid]]'s filter memo (two
+    * generations, so at most 64 memoized filters). */
+  private val MemoGeneration = 32
+
+  /** One meta row as the `field => value` view the local filter evaluator
+    * reads; `row` moves it along the rows. Each field name resolves to its
+    * column once (a few names per filter), not once per row. Packed-meta
+    * handles (`rows == null`: id-only metadata held as one primitive
+    * column) synthesize the id field on demand — boxing only on this rare
+    * id-filter path. */
+  private final class RowView(ids: Array[Long], rows: Array[Array[Any]],
+                              fieldIdx: Map[String, Int]) extends (String => Any) {
+    var row = 0
+    private var names = new Array[String](4)
+    private var cols = new Array[Int](4)
+    private var n = 0
+
+    private def column(f: String): Int = {
+      var i = 0
+      while (i < n) { if (names(i) == f) return cols(i); i += 1 }
+      if (n == names.length) {
+        names = java.util.Arrays.copyOf(names, n * 2)
+        cols = java.util.Arrays.copyOf(cols, n * 2)
+      }
+      names(n) = f
+      cols(n) = fieldIdx.getOrElse(f, -1)
+      n += 1
+      cols(n - 1)
+    }
+
+    def apply(f: String): Any =
+      if (rows == null) { if (f == "id") java.lang.Long.valueOf(ids(row)) else null }
+      else {
+        val c = column(f)
+        if (c < 0) null else rows(row)(c)
+      }
+  }
+
   /** Embedded serving for the FULL hybrid lifecycle — the reference's own
     * deployment shape (§3.1: one in-process engine runs metadata filter →
     * vector + text → fusion → top-k, hybrid_search_index.go:477-615) with
     * zero Spark jobs per query. Sub-indexes are the embedded serving
     * structures ([[FlatKnn.LocalFlat]], [[BM25.LocalBM25]]); the metadata
     * filter runs the [[Filters.matchesLocal]] evaluator (spec-pinned equal
-    * to the compiled Column) over collected rows, and the candidate set is
-    * pushed into BOTH modalities as a scan predicate, the per-index
-    * document-filter composition. Results match [[search]] up to
-    * floating-point ulps in BM25 sums. */
+    * to the compiled Column) over collected rows once per distinct filter
+    * (a two-generation memo of at most 64 filters keeps the result), and
+    * the candidate set is pushed into BOTH modalities as a scan predicate,
+    * the per-index document-filter composition. Results match [[search]]
+    * up to floating-point ulps in BM25 sums. */
   final class LocalHybrid private[hybrid] (
       metaIds: Array[Long], metaRows: Array[Array[Any]],
       fieldIdx: Map[String, Int],
@@ -362,42 +401,58 @@ object Hybrid {
       * the rows, which this does not attempt to size). */
     def metaBytes: Long = metaIds.length * 8L
 
-    // Per-filter candidate cache: the reference's metadata index answers a
+    // Per-filter candidate memo: the reference's metadata index answers a
     // filter from precomputed roaring bitmaps (metadata_index.go:579-698),
     // not by rescanning every document per query — the embedded analog
     // evaluates a DISTINCT filter once over the meta rows and memoizes the
     // matching ids as an [[IdSet]] (one sorted primitive array,
     // binary-search membership, no per-id boxing). Repeated filters — the
-    // serving-path norm — then cost one lookup instead of a 1M-row scan
-    // per search.
-    private val candCache =
-      new java.util.concurrent.ConcurrentHashMap[Seq[FilterGroup], IdSet]()
+    // serving-path norm — then cost one lookup instead of a full scan of
+    // the rows per search.
+    //
+    // The memo holds two generations of at most MemoGeneration entries
+    // each, so at most 64 in all: a hit in the old map is promoted into the
+    // current one, and a full current map becomes the old one (dropping
+    // the previous old map). A repeating filter therefore survives any run
+    // of one-off filters shorter than a generation, instead of being
+    // flushed with them, and an unbounded stream of distinct filters
+    // cannot grow driver memory.
+    private val memoLock = new Object
+    private var memoCur = new java.util.HashMap[Seq[FilterGroup], IdSet]()
+    private var memoOld = new java.util.HashMap[Seq[FilterGroup], IdSet]()
+
+    private def memoPut(fs: Seq[FilterGroup], set: IdSet): Unit = {
+      if (memoCur.size >= MemoGeneration && !memoCur.containsKey(fs)) {
+        memoOld = memoCur
+        memoCur = new java.util.HashMap[Seq[FilterGroup], IdSet]()
+      }
+      memoCur.put(fs, set)
+    }
 
     private def candidatesFor(filters: Seq[FilterGroup]): IdSet = {
-      // bound the memo: a workload cycling through unbounded DISTINCT
-      // filters must not grow driver memory without limit — dropping the
-      // cache only costs the next query its one evaluation pass
-      if (candCache.size > 64) candCache.clear()
-      candCache.computeIfAbsent(filters, { fs =>
-        val b = new scala.collection.mutable.ArrayBuilder.ofLong
-        var i = 0
-        while (i < metaIds.length) {
-          // packed-meta handles (metaRows == null: id-only metadata
-          // collected as one primitive column) synthesize the id field
-          // on demand — boxing only on this rare id-filter path
-          val get: String => Any =
-            if (metaRows == null) {
-              val id = metaIds(i)
-              f => if (f == "id") java.lang.Long.valueOf(id) else null
-            } else {
-              val row = metaRows(i)
-              f => fieldIdx.get(f).map(row(_)).orNull
-            }
-          if (Filters.matchesGroups(fs, get)) b += metaIds(i)
-          i += 1
+      val hit = memoLock.synchronized {
+        val cur = memoCur.get(filters)
+        if (cur != null) cur
+        else {
+          val old = memoOld.remove(filters)
+          if (old != null) memoPut(filters, old)
+          old
         }
-        IdSet(b.result())
-      })
+      }
+      if (hit != null) return hit
+      // miss: evaluate outside the lock (two threads missing on the same
+      // filter both evaluate it; the results are equal)
+      val get = new RowView(metaIds, metaRows, fieldIdx)
+      val b = new scala.collection.mutable.ArrayBuilder.ofLong
+      var i = 0
+      while (i < metaIds.length) {
+        get.row = i
+        if (Filters.matchesGroups(filters, get)) b += metaIds(i)
+        i += 1
+      }
+      val set = IdSet(b.result())
+      memoLock.synchronized(memoPut(filters, set))
+      set
     }
 
     def search(filters: Seq[FilterGroup], qvec: Option[Array[Float]],

@@ -243,83 +243,138 @@ object BM25 {
   }
 
   /** Embedded serving for BM25: postings grouped per term into primitive
-    * arrays in the local JVM, scored with a LongMap accumulator + bounded
-    * heap — the reference's in-process text search (an inverted map of
-    * bitmaps + tf maps walked per query term, bm25_index_search.go:175-226)
-    * without Spark job scheduling. Same formula/constants as [[bm25Term]];
-    * per-doc sums can differ from the DataFrame aggregate only in
-    * floating-point ulps (summation order). */
+    * arrays in the local JVM — the reference's in-process text search (an
+    * inverted map of bitmaps + tf maps walked per query term,
+    * bm25_index_search.go:175-226) without Spark job scheduling.
+    *
+    * Docs are indexed in ascending id order, so `ids` is sorted and is
+    * also the id → index map (binary search). Each term holds its
+    * postings' doc indexes and their IMPACTS `idf · norm`, computed once
+    * by [[serve]] with the formula/constants of [[bm25Term]]. A query adds
+    * impacts term by term, in query-term order, into a per-thread scratch
+    * (a dense `Double` accumulator, a touched-doc list and a candidate
+    * bitmap) and reads the top k through [[graft.vector.FlatKnn.BoundedTopK]]
+    * on (−score, id). Each doc's sum folds in the same order as a
+    * per-query `idf · norm` fold, so scores are bit-identical to it;
+    * against the DataFrame aggregate they can differ only in
+    * floating-point ulps (summation order).
+    *
+    * Footprint: the scratch costs 8 B plus 1 bit per doc per serving
+    * thread, plus a touched list as long as the largest match set that
+    * thread has scored; a query clears only the slots it touched, so it
+    * allocates nothing in proportion to the corpus. */
   final class LocalBM25 private[BM25] (
-      tokenizer: Tokenize.Tokenizer, nDocs: Double, avgdl: Double,
-      df: java.util.HashMap[String, java.lang.Double],
+      tokenizer: Tokenize.Tokenizer,
       postDocs: java.util.HashMap[String, Array[Int]], // term -> doc indexes
-      postTfs: java.util.HashMap[String, Array[Double]], // term -> tfs
-      ids: Array[Long], dls: Array[Double]) {
+      postImpacts: java.util.HashMap[String, Array[Double]], // term -> idf·norm
+      ids: Array[Long]) { // ascending
     def size: Int = ids.length
 
-    /** Resident bytes of the postings (doc indexes + tfs per term), doc
-      * arrays, and vocab strings — no reference memory figure exists for
-      * BM25; this makes ours measurable. */
+    /** Resident bytes of the postings (doc indexes + impacts per term), the
+      * id array, and vocab strings — no reference memory figure exists for
+      * BM25; this makes ours measurable. The per-thread query scratch is
+      * not counted. */
     def byteSize: Long = {
-      var b = ids.length.toLong * (8 + 8) // ids + dls
+      var b = ids.length.toLong * 8
       val it = postDocs.entrySet().iterator()
       while (it.hasNext) {
         val e = it.next()
-        b += e.getKey.length.toLong * 2 + e.getValue.length * 4L
+        b += e.getKey.length.toLong * 2 + e.getValue.length * (4L + 8L)
       }
-      val it2 = postTfs.values().iterator()
-      while (it2.hasNext) b += it2.next().length * 8L
-      b + df.size().toLong * 8
+      b
     }
 
+    private val scratch = ThreadLocal.withInitial[Scratch](() => new Scratch(ids.length))
+
     /** Top-k (id, score), score desc then id asc — the [[BM25Corpus.search]]
-      * ordering. Empty query / no matching terms ⇒ empty. `filter` is the
-      * embedded document pre-filter: filtered docs are skipped DURING
-      * scoring, the reference's semantics (bm25_index_search.go:317-319). */
+      * ordering; `k <= 0` returns every match (limiter.go:12-17). Empty
+      * query / no matching terms ⇒ empty. `filter` is the embedded
+      * document pre-filter: filtered docs are skipped DURING scoring, the
+      * reference's semantics (bm25_index_search.go:317-319). An
+      * [[graft.vector.IdSet]] is marked into the scratch bitmap once per
+      * query; any other predicate is called once per posting. */
     def search(query: String, k: Int,
                filter: Long => Boolean = null): Seq[(Long, Double)] = {
       val terms = tokenizer.tokens(query).distinct
-      val acc = scala.collection.mutable.LongMap.empty[Double]
-      terms.foreach { t =>
-        val docs = postDocs.get(t)
-        if (docs != null) {
-          val dfT: Double = df.get(t)
-          val idf = math.log((nDocs - dfT + 0.5) / (dfT + 0.5) + 1.0)
-          val tfs = postTfs.get(t)
-          var i = 0
-          while (i < docs.length) {
-            val d = docs(i)
-            if (filter == null || filter(ids(d))) {
-              val tf = tfs(i)
-              val norm = tf * (K1 + 1.0) /
-                (tf + K1 * (1.0 - B + B * dls(d) / avgdl))
-              val key = d.toLong
-              acc.updateWith(key) {
-                case Some(v) => Some(v + idf * norm)
-                case None    => Some(idf * norm)
+      val sc = scratch.get()
+      try {
+        val marked = filter match {
+          case s: graft.vector.IdSet => sc.mark(s.ids, ids); true
+          case _                     => false
+        }
+        val acc = sc.acc
+        val bits = sc.bits
+        terms.foreach { t =>
+          val docs = postDocs.get(t)
+          if (docs != null) {
+            val imp = postImpacts.get(t)
+            var i = 0
+            while (i < docs.length) {
+              val d = docs(i)
+              val allowed =
+                if (marked) (bits(d >>> 6) & (1L << d)) != 0
+                else filter == null || filter(ids(d))
+              if (allowed) {
+                // impacts are > 0 (df <= n_docs, tf >= 1), so 0.0 marks an
+                // untouched slot; the first impact is stored, not added
+                val a = acc(d)
+                if (a == 0.0) { sc.touch(d); acc(d) = imp(i) }
+                else acc(d) = a + imp(i)
               }
+              i += 1
             }
-            i += 1
           }
         }
+        val n = sc.nTouched
+        if (n == 0) return Seq.empty
+        val heap = new graft.vector.FlatKnn.BoundedTopK(if (k <= 0) n else math.min(k, n))
+        val touched = sc.touched
+        var j = 0
+        while (j < n) { val d = touched(j); heap.offer(-acc(d), ids(d)); j += 1 }
+        heap.sortedEntries.map { case (s, id) => (id, -s) }
+      } finally sc.reset()
+    }
+  }
+
+  /** One serving thread's query scratch for [[LocalBM25]]. */
+  private final class Scratch(nDocs: Int) {
+    val acc = new Array[Double](nDocs)
+    val bits = new Array[Long]((nDocs + 63) >>> 6)
+    var touched = new Array[Int](64)
+    var nTouched = 0
+    private var markLo = 0  // word range of the bitmap the last mark set
+    private var markHi = -1
+
+    def touch(d: Int): Unit = {
+      if (nTouched == touched.length)
+        touched = java.util.Arrays.copyOf(touched, nTouched * 2)
+      touched(nTouched) = d
+      nTouched += 1
+    }
+
+    /** Set the bit of every doc index whose id is in `cand` (both sorted). */
+    def mark(cand: Array[Long], ids: Array[Long]): Unit = {
+      var from = 0
+      var i = 0
+      while (i < cand.length && from < ids.length) {
+        val p = java.util.Arrays.binarySearch(ids, from, ids.length, cand(i))
+        if (p >= 0) {
+          if (markHi < markLo) markLo = p >>> 6
+          markHi = p >>> 6
+          bits(p >>> 6) |= 1L << p
+          from = p + 1
+        } else from = -p - 1
+        i += 1
       }
-      if (acc.isEmpty) return Seq.empty // k <= 0 = all (limiter.go:12-17)
-      // bounded heap, head = WORST kept (lowest score, then highest id)
-      val worstFirst: Ordering[(Double, Long)] = new Ordering[(Double, Long)] {
-        def compare(a: (Double, Long), b: (Double, Long)): Int = {
-          val c = java.lang.Double.compare(b._1, a._1)
-          if (c != 0) c else java.lang.Long.compare(a._2, b._2)
-        }
-      }
-      val kk = if (k <= 0) acc.size else k
-      val heap = scala.collection.mutable.PriorityQueue.empty[(Double, Long)](worstFirst)
-      acc.foreachEntry { (dIdx, s) =>
-        val cand = (s, ids(dIdx.toInt))
-        if (heap.size < kk) heap.enqueue(cand)
-        else if (worstFirst.lt(cand, heap.head)) { heap.dequeue(); heap.enqueue(cand) }
-      }
-      heap.toSeq.sortBy { case (s, id) => (-s, id) }
-        .map { case (s, id) => (id, s) }
+    }
+
+    /** Zero the touched accumulator slots and the marked bitmap words. */
+    def reset(): Unit = {
+      var j = 0
+      while (j < nTouched) { acc(touched(j)) = 0.0; j += 1 }
+      nTouched = 0
+      if (markHi >= markLo) java.util.Arrays.fill(bits, markLo, markHi + 1, 0L)
+      markLo = 0; markHi = -1
     }
   }
 
@@ -327,21 +382,24 @@ object BM25 {
     * bytes; must fit driver memory — the reference's standing constraint).
     * Postings are grouped per term ON the cluster (one collected row per
     * term, arrays inside) so the driver never materializes row-per-posting
-    * objects. */
+    * objects. Each posting's impact `idf · norm` is computed here, once,
+    * with the arithmetic of [[bm25Term]]. */
   def serve(corpus: BM25Corpus): LocalBM25 = {
     val lens =
       (if (corpus.docLens != null) corpus.docLens
        else corpus.postings.select(col("id"), col("dl")).distinct())
         .select(col("id").cast("long"), col("dl").cast("double")).collect()
+        .sortBy(_.getLong(0))
     val ids = lens.map(_.getLong(0))
     val dls = lens.map(_.getDouble(1))
-    val idxOf = new java.util.HashMap[java.lang.Long, Integer](ids.length * 2)
-    ids.zipWithIndex.foreach { case (id, i) => idxOf.put(id, i) }
     val dfMap = new java.util.HashMap[String, java.lang.Double]()
     corpus.termDf.select(col("term"), col("df").cast("double")).collect()
       .foreach(r => dfMap.put(r.getString(0), r.getDouble(1)))
+    val st = corpus.stats.select(col("n_docs"), col("avgdl")).head()
+    val nDocs = st.getDouble(0)
+    val avgdl = st.getDouble(1)
     val postDocs = new java.util.HashMap[String, Array[Int]]()
-    val postTfs = new java.util.HashMap[String, Array[Double]]()
+    val postImpacts = new java.util.HashMap[String, Array[Double]]()
     corpus.postings
       .groupBy(col("term"))
       .agg(collect_list(col("id").cast("long")).as("ids"),
@@ -351,15 +409,25 @@ object BM25 {
         val t = r.getString(0)
         val docIds = r.getSeq[Long](1)
         val tfs = r.getSeq[Double](2)
+        val dfT: Double = dfMap.get(t)
+        val idf = math.log((nDocs - dfT + 0.5) / (dfT + 0.5) + 1.0)
         val dArr = new Array[Int](docIds.length)
+        val impacts = new Array[Double](docIds.length)
         var i = 0
-        while (i < dArr.length) { dArr(i) = idxOf.get(docIds(i)); i += 1 }
+        while (i < dArr.length) {
+          val d = java.util.Arrays.binarySearch(ids, docIds(i))
+          require(d >= 0, s"BM25 posting for doc ${docIds(i)} has no doc length")
+          val tf = tfs(i)
+          val norm = tf * (K1 + 1.0) /
+            (tf + K1 * (1.0 - B + B * dls(d) / avgdl))
+          dArr(i) = d
+          impacts(i) = idf * norm
+          i += 1
+        }
         postDocs.put(t, dArr)
-        postTfs.put(t, tfs.toArray)
+        postImpacts.put(t, impacts)
       }
-    val st = corpus.stats.select(col("n_docs"), col("avgdl")).head()
-    new LocalBM25(corpus.tokenizer, st.getDouble(0), st.getDouble(1),
-      dfMap, postDocs, postTfs, ids, dls)
+    new LocalBM25(corpus.tokenizer, postDocs, postImpacts, ids)
   }
 
   /** Incremental ADD: index a new document batch into an existing corpus

@@ -38,9 +38,10 @@ object Tokenize {
   /** Column + string forms of [[simple]]. */
   case object Simple extends Tokenizer {
     def column(text: Column): Column = simple(text)
+    private val word = "[a-z0-9]+".r
     def tokens(s: String): Seq[String] =
       if (s == null) Seq.empty
-      else "[a-z0-9]+".r.findAllIn(s.toLowerCase(Locale.ROOT)).toSeq
+      else word.findAllIn(s.toLowerCase(Locale.ROOT)).toSeq
   }
 
   /** Column + string forms of [[uax29]]. */

@@ -307,7 +307,7 @@ object FlatKnn {
   /** Bounded top-k of (score, id), smaller score better, ties to smaller
     * id — a primitive-array binary max-heap (root = worst kept), shared by
     * the embedded scan paths. Zero boxing on the offer path. */
-  private[vector] final class BoundedTopK(k: Int) {
+  private[graft] final class BoundedTopK(k: Int) {
     private val hs = new Array[Double](k) // scores
     private val hi = new Array[Long](k)   // ids
     private var n = 0

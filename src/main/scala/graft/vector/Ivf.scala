@@ -126,7 +126,7 @@ object Ivf {
     val np = math.max(1, math.min(nprobe, index.model.k))
     // (qid, qvec, probed cluster) — tiny, broadcast into the cluster join
     val probeRows = qs.flatMap { case (qid, qv) =>
-      index.model.ranked(qv).take(np).map(c => (qid, qv, c))
+      index.model.ranked(qv, np).map(c => (qid, qv, c))
     }
     import spark.implicits._
     val probes = spark.createDataFrame(probeRows.toIndexedSeq)

@@ -231,6 +231,9 @@ object IvfServe {
       }
   }
 
+  /** Rows per scan piece of a probe (see [[LocalIvf.search]]). */
+  private[vector] val PieceRows = 16384
+
   /** The packed embedded IVF structure. Search contract mirrors the
     * distributed [[Ivf.search]]: rank ALL centroids by raw-L2² against
     * the query, scan the top-nprobe cluster ranges, score with the
@@ -252,56 +255,52 @@ object IvfServe {
       case _            => Double.NaN
     }
 
+    /** Top-k (id, score) over the `nprobe` lists nearest `q`, score asc
+      * then id asc. The probed rows are cut into pieces of at most
+      * [[PieceRows]] rows, across list boundaries: a probe that fits in one
+      * piece is scanned on the calling thread (no fork/join hand-off for
+      * the common small probe); a larger one scans its pieces in parallel
+      * with per-piece heaps, and the merge by (score, id) makes thread
+      * order irrelevant. */
     def search(q: Array[Float], k0: Int, nprobe: Int,
                filter: Long => Boolean = null,
                threshold: Option[Double] = None): Seq[(Long, Double)] = {
       if (ids.isEmpty) return Seq.empty
       require(q.length == dim, s"query dim ${q.length} != index dim $dim")
       val np = math.max(1, math.min(nprobe, nlist))
-      val order = centroids.indices.sortBy(c => Kmeans.l2sq(q, centroids(c)))
+      val order = Kmeans.ranked(q, centroids, np)
       val qd = new Array[Double](dim)
       var j = 0
       while (j < dim) { qd(j) = q(j).toDouble; j += 1 }
       // ‖q‖ for the cosine denominator — the distributed expr computes
       // sqrt(dot(q,q)) with the same left-to-right fold
-      var qq = 0.0
-      if (cosine) {
+      val qq = if (!cosine) 0.0 else {
+        var ss = 0.0
         j = 0
-        while (j < dim) { qq += qd(j) * qd(j); j += 1 }
-        qq = math.sqrt(qq)
+        while (j < dim) { ss += qd(j) * qd(j); j += 1 }
+        math.sqrt(ss)
       }
-      // flatten probed ranges into bounded pieces and scan them in
-      // parallel with per-piece heaps — the LocalFlat chunked-scan shape;
-      // the merge by (score, id) makes thread order irrelevant
-      val pieceBuf = scala.collection.mutable.ArrayBuffer.empty[(Int, Int)]
+      // probed rows are numbered 0 until probedRows, list by list in
+      // probe order; a piece is a range of those numbers
       var probedRows = 0
       var p = 0
-      while (p < np) {
-        val cl = order(p)
-        var lo = starts(cl)
-        val hi = starts(cl + 1)
-        probedRows += hi - lo
-        while (lo < hi) {
-          val end = math.min(lo + 16384, hi)
-          pieceBuf += ((lo, end))
-          lo = end
-        }
-        p += 1
-      }
+      while (p < np) { probedRows += starts(order(p) + 1) - starts(order(p)); p += 1 }
       val k = if (k0 <= 0) probedRows else math.min(k0, probedRows)
       if (k == 0) return Seq.empty
       val thr = threshold.getOrElse(Double.NaN)
       val l2 = if (cosine) null else payload.l2Scorer(dim)
       val dotVv = if (cosine) payload.dotVvScorer(dim) else null
-      val pieces = pieceBuf.toArray
-      val merged = java.util.stream.IntStream.range(0, pieces.length)
-        .parallel()
-        .mapToObj[FlatKnn.BoundedTopK] { pc =>
-          val (lo, hi) = pieces(pc)
-          val heap = new FlatKnn.BoundedTopK(k)
-          val out = if (cosine) new Array[Double](2) else null
-          var i = lo
-          while (i < hi) {
+      def scan(from: Int, until: Int): FlatKnn.BoundedTopK = {
+        val heap = new FlatKnn.BoundedTopK(k)
+        val out = if (cosine) new Array[Double](2) else null
+        var base = 0 // probed-row number of list order(p)'s first row
+        var p = 0
+        while (p < np && base < until) {
+          val lo = starts(order(p))
+          val len = starts(order(p) + 1) - lo
+          var i = lo + math.max(from - base, 0)
+          val end = lo + math.min(until - base, len)
+          while (i < end) {
             if (filter == null || filter(ids(i))) {
               var s = 0.0
               if (cosine) {
@@ -320,10 +319,20 @@ object IvfServe {
             }
             i += 1
           }
-          heap
+          base += len
+          p += 1
         }
-        .reduce(null, (a: FlatKnn.BoundedTopK, b: FlatKnn.BoundedTopK) =>
-          if (a == null) b else if (b == null) a else a.absorb(b))
+        heap
+      }
+      val nPieces = (probedRows + PieceRows - 1) / PieceRows
+      val merged =
+        if (nPieces == 1) scan(0, probedRows)
+        else java.util.stream.IntStream.range(0, nPieces)
+          .parallel()
+          .mapToObj[FlatKnn.BoundedTopK](pc =>
+            scan(pc * PieceRows, math.min((pc + 1) * PieceRows, probedRows)))
+          .reduce(null, (a: FlatKnn.BoundedTopK, b: FlatKnn.BoundedTopK) =>
+            if (a == null) b else if (b == null) a else a.absorb(b))
       if (merged == null) Seq.empty
       else merged.sortedEntries.map { case (s, id) => (id, s) }
     }

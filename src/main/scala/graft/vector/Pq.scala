@@ -1025,7 +1025,7 @@ object IvfPq {
     // per (query, probed cluster): residual query → dist table
     val tables: Map[(Long, Int), Array[Array[Double]]] = qs.flatMap {
       case (qid, qv) =>
-        index.coarse.ranked(qv).take(np).map { c =>
+        index.coarse.ranked(qv, np).map { c =>
           val cent = index.coarse.centroids(c)
           val resid = Array.tabulate(qv.length)(i => qv(i) - cent(i))
           (qid, c) -> index.pq.distTable(resid)
