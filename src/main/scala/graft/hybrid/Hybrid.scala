@@ -418,41 +418,41 @@ object Hybrid {
     // flushed with them, and an unbounded stream of distinct filters
     // cannot grow driver memory.
     private val memoLock = new Object
-    private var memoCur = new java.util.HashMap[Seq[FilterGroup], IdSet]()
-    private var memoOld = new java.util.HashMap[Seq[FilterGroup], IdSet]()
+    private var memoCur = new java.util.HashMap[Seq[FilterGroup], Candidates]()
+    private var memoOld = new java.util.HashMap[Seq[FilterGroup], Candidates]()
 
-    private def memoPut(fs: Seq[FilterGroup], set: IdSet): Unit = {
-      if (memoCur.size >= MemoGeneration && !memoCur.containsKey(fs)) {
-        memoOld = memoCur
-        memoCur = new java.util.HashMap[Seq[FilterGroup], IdSet]()
+    /** A memoized filter's candidates, evaluated on first read outside the
+      * memo lock; threads reading the same entry meanwhile wait for that
+      * one evaluation instead of repeating it. */
+    private final class Candidates(filters: Seq[FilterGroup]) {
+      lazy val ids: IdSet = {
+        val get = new RowView(metaIds, metaRows, fieldIdx)
+        val b = new scala.collection.mutable.ArrayBuilder.ofLong
+        var i = 0
+        while (i < metaIds.length) {
+          get.row = i
+          if (Filters.matchesGroups(filters, get)) b += metaIds(i)
+          i += 1
+        }
+        IdSet(b.result())
       }
-      memoCur.put(fs, set)
     }
 
     private def candidatesFor(filters: Seq[FilterGroup]): IdSet = {
-      val hit = memoLock.synchronized {
-        val cur = memoCur.get(filters)
-        if (cur != null) cur
-        else {
-          val old = memoOld.remove(filters)
-          if (old != null) memoPut(filters, old)
-          old
+      val entry = memoLock.synchronized {
+        var e = memoCur.get(filters)
+        if (e == null) {
+          e = memoOld.remove(filters)
+          if (e == null) e = new Candidates(filters)
+          if (memoCur.size >= MemoGeneration) {
+            memoOld = memoCur
+            memoCur = new java.util.HashMap[Seq[FilterGroup], Candidates]()
+          }
+          memoCur.put(filters, e)
         }
+        e
       }
-      if (hit != null) return hit
-      // miss: evaluate outside the lock (two threads missing on the same
-      // filter both evaluate it; the results are equal)
-      val get = new RowView(metaIds, metaRows, fieldIdx)
-      val b = new scala.collection.mutable.ArrayBuilder.ofLong
-      var i = 0
-      while (i < metaIds.length) {
-        get.row = i
-        if (Filters.matchesGroups(filters, get)) b += metaIds(i)
-        i += 1
-      }
-      val set = IdSet(b.result())
-      memoLock.synchronized(memoPut(filters, set))
-      set
+      entry.ids
     }
 
     def search(filters: Seq[FilterGroup], qvec: Option[Array[Float]],

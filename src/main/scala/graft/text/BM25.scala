@@ -259,10 +259,11 @@ object BM25 {
     * against the DataFrame aggregate they can differ only in
     * floating-point ulps (summation order).
     *
-    * Footprint: the scratch costs 8 B plus 1 bit per doc per serving
-    * thread, plus a touched list as long as the largest match set that
-    * thread has scored; a query clears only the slots it touched, so it
-    * allocates nothing in proportion to the corpus. */
+    * Footprint: the scratch costs 8 B plus 1 bit per doc of the largest
+    * handle a serving thread has queried, per serving thread, plus a
+    * touched list as long as the largest match set that thread has
+    * scored; handles share it, and a query clears only the slots it
+    * touched, so it allocates nothing in proportion to the corpus. */
   final class LocalBM25 private[BM25] (
       tokenizer: Tokenize.Tokenizer,
       postDocs: java.util.HashMap[String, Array[Int]], // term -> doc indexes
@@ -284,8 +285,6 @@ object BM25 {
       b
     }
 
-    private val scratch = ThreadLocal.withInitial[Scratch](() => new Scratch(ids.length))
-
     /** Top-k (id, score), score desc then id asc — the [[BM25Corpus.search]]
       * ordering; `k <= 0` returns every match (limiter.go:12-17). Empty
       * query / no matching terms ⇒ empty. `filter` is the embedded
@@ -296,7 +295,7 @@ object BM25 {
     def search(query: String, k: Int,
                filter: Long => Boolean = null): Seq[(Long, Double)] = {
       val terms = tokenizer.tokens(query).distinct
-      val sc = scratch.get()
+      val sc = scratchFor(ids.length)
       try {
         val marked = filter match {
           case s: graft.vector.IdSet => sc.mark(s.ids, ids); true
@@ -334,6 +333,19 @@ object BM25 {
         heap.sortedEntries.map { case (s, id) => (id, -s) }
       } finally sc.reset()
     }
+  }
+
+  /** One scratch per serving thread, shared by every [[LocalBM25]] handle
+    * (a re-served store drops its old handle, so a scratch per handle
+    * would leave one dead accumulator per thread per re-serve). Grown to
+    * the largest handle the thread has queried; [[Scratch.reset]] leaves
+    * it all zero, so any handle can reuse it. */
+  private val scratch = new ThreadLocal[Scratch]
+
+  private def scratchFor(nDocs: Int): Scratch = {
+    val sc = scratch.get()
+    if (sc != null && sc.acc.length >= nDocs) sc
+    else { val fresh = new Scratch(nDocs); scratch.set(fresh); fresh }
   }
 
   /** One serving thread's query scratch for [[LocalBM25]]. */

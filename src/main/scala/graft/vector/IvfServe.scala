@@ -231,8 +231,18 @@ object IvfServe {
       }
   }
 
-  /** Rows per scan piece of a probe (see [[LocalIvf.search]]). */
-  private[vector] val PieceRows = 16384
+  /** Vector coordinates per scan piece of a probe (see [[LocalIvf.search]]):
+    * 4,096 rows at 64 dims. A piece's scan cost grows with its coordinates
+    * while a fork/join hand-off costs about the same at any size, so the
+    * cut is in coordinates, not rows. Measured on 4 vCPUs at 64 dims: in a
+    * loop of back-to-back probes, pieces of 1,024 rows gave the lowest
+    * single-client p50 from 2,000 probed rows up, but in the serving
+    * benchmark, where 12% of probes hold 1,025–2,048 rows, fanning those
+    * out cost about 30% of four-client throughput (a 5-pair A/B on a
+    * shared host); with pieces of 4,096
+    * rows every probe there runs on the calling thread, and probes of
+    * 8,000 rows and more keep the parallel speed-up. */
+  private[vector] val PieceCoords = 1 << 18
 
   /** The packed embedded IVF structure. Search contract mirrors the
     * distributed [[Ivf.search]]: rank ALL centroids by raw-L2² against
@@ -257,11 +267,11 @@ object IvfServe {
 
     /** Top-k (id, score) over the `nprobe` lists nearest `q`, score asc
       * then id asc. The probed rows are cut into pieces of at most
-      * [[PieceRows]] rows, across list boundaries: a probe that fits in one
-      * piece is scanned on the calling thread (no fork/join hand-off for
-      * the common small probe); a larger one scans its pieces in parallel
-      * with per-piece heaps, and the merge by (score, id) makes thread
-      * order irrelevant. */
+      * [[PieceCoords]] coordinates, across list boundaries: a probe that
+      * fits in one piece is scanned on the calling thread (no fork/join
+      * hand-off for the common small probe); a larger one scans its pieces
+      * in parallel with per-piece heaps, and the merge by (score, id) makes
+      * thread order irrelevant. */
     def search(q: Array[Float], k0: Int, nprobe: Int,
                filter: Long => Boolean = null,
                threshold: Option[Double] = None): Seq[(Long, Double)] = {
@@ -324,13 +334,14 @@ object IvfServe {
         }
         heap
       }
-      val nPieces = (probedRows + PieceRows - 1) / PieceRows
+      val pieceRows = math.max(1, PieceCoords / dim)
+      val nPieces = (probedRows + pieceRows - 1) / pieceRows
       val merged =
         if (nPieces == 1) scan(0, probedRows)
         else java.util.stream.IntStream.range(0, nPieces)
           .parallel()
           .mapToObj[FlatKnn.BoundedTopK](pc =>
-            scan(pc * PieceRows, math.min((pc + 1) * PieceRows, probedRows)))
+            scan(pc * pieceRows, math.min((pc + 1) * pieceRows, probedRows)))
           .reduce(null, (a: FlatKnn.BoundedTopK, b: FlatKnn.BoundedTopK) =>
             if (a == null) b else if (b == null) a else a.absorb(b))
       if (merged == null) Seq.empty

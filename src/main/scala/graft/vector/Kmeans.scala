@@ -31,30 +31,17 @@ object Kmeans {
   }
 
   /** The `n` indices of `cs` nearest `v` by raw L2², nearest first: each
-    * distance is computed once, and indices rank by (distance, index) — the
-    * order a stable sort on distance gives. Insertion into a sorted window
-    * of `n`, so O(|cs| · n) comparisons at worst and no boxing; probes take
-    * n ≪ |cs|. */
+    * distance is computed once, then the indices sort by (distance, index)
+    * — the order a stable sort on distance gives. O(|cs| log |cs|) for
+    * every `n`. */
   private[vector] def ranked(v: Array[Float], cs: Array[Array[Float]],
-                             n0: Int): Array[Int] = {
-    val n = math.max(0, math.min(n0, cs.length))
-    val dist = new Array[Double](cs.length)
-    val sel = new Array[Int](n)
-    var filled = 0
-    var c = 0
-    while (c < cs.length && n > 0) {
-      val dc = l2sq(v, cs(c))
-      dist(c) = dc
-      if (filled < n || java.lang.Double.compare(dc, dist(sel(n - 1))) < 0) {
-        var at = if (filled < n) { filled += 1; filled - 1 } else n - 1
-        while (at > 0 && java.lang.Double.compare(dist(sel(at - 1)), dc) > 0) {
-          sel(at) = sel(at - 1); at -= 1
-        }
-        sel(at) = c
-      }
-      c += 1
+                             n: Int): Array[Int] = {
+    val dist = Array.tabulate(cs.length)(c => l2sq(v, cs(c)))
+    val byDist: Ordering[Int] = (a, b) => {
+      val c = java.lang.Double.compare(dist(a), dist(b))
+      if (c != 0) c else Integer.compare(a, b)
     }
-    sel
+    Array.range(0, cs.length).sorted(byDist).take(math.max(0, n))
   }
 
   private[vector] def l2sq(a: Array[Float], b: Array[Float]): Double = {

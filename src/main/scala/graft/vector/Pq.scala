@@ -1112,7 +1112,7 @@ object IvfPq {
       // same normalize-then-rotate order as the distributed path
       val q = rotation.fold(qPrep)(Pq.applyRotation(_, qPrep))
       val np = math.max(1, math.min(nprobe, coarse.k))
-      val probes = coarse.ranked(q).take(np)
+      val probes = coarse.ranked(q, np)
       val total = size
       if (total == 0) return Seq.empty
       val k = math.min(if (k0 <= 0) total else k0, total)

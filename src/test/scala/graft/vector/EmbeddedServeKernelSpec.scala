@@ -115,10 +115,11 @@ class EmbeddedServeKernelSpec extends graft.SparkSpec {
   test("LocalBM25 query allocation is bounded by the matches, not the corpus") {
     val s = spark; import s.implicits._
     // 50k docs; the query's terms match 10 of them
-    val big = BM25.serve(BM25.build(spark.range(50000).select(col("id"),
+    val bigCorpus = BM25.build(spark.range(50000).select(col("id"),
       when(col("id") % 5000 === 17, lit("rare common filler"))
         .otherwise(concat(lit("common t"), (col("id") % 997).cast("string")))
-        .as("text"))))
+        .as("text")))
+    val big = BM25.serve(bigCorpus)
     assert(big.size == 50000)
     assert(big.search("rare", 0).size == 10)
     val set = IdSet((0L until 50000L by 37L).toArray ++ Array(17L, 5017L))
@@ -139,6 +140,19 @@ class EmbeddedServeKernelSpec extends graft.SparkSpec {
     assert(filtered < 16 * 1024, s"IdSet-filtered query allocates $filtered B/call")
     assert(big.search("rare", 10, set).map(_._1) ==
       (0L until 10L).map(17L + 5000L * _).filter(set))
+
+    // handles share one scratch per thread: a re-served handle's first
+    // query reuses the one this thread already holds, and a smaller
+    // handle queried in between leaves it clean for both
+    val again = BM25.serve(bigCorpus)
+    val before = mx.getThreadAllocatedBytes(me)
+    again.search("rare zzz", 10)
+    val first = mx.getThreadAllocatedBytes(me) - before
+    assert(first < 64 * 1024, s"a second handle's first query allocates $first B")
+    for (q <- queries; k <- Seq(3, 0)) {
+      assert(served.search(q, k) == model(q, k, null), s"q='$q' k=$k")
+      assert(again.search("rare common", k) == big.search("rare common", k))
+    }
   }
 
   // ----------------------------------------------------------------- IVF
@@ -151,7 +165,7 @@ class EmbeddedServeKernelSpec extends graft.SparkSpec {
     ).as("vector")).repartition(4)
 
   private lazy val small = Ivf.build(vectors(3000).cache(), nlist = 6, maxIter = 4)
-  private lazy val large = Ivf.build(vectors(20000).cache(), nlist = 3, maxIter = 3)
+  private lazy val large = Ivf.build(vectors(40000).cache(), nlist = 3, maxIter = 3)
 
   private def queryVecs(n: Int): Array[Array[Float]] =
     Array.tabulate(n) { i =>
@@ -170,6 +184,7 @@ class EmbeddedServeKernelSpec extends graft.SparkSpec {
 
   test("LocalIvf == Ivf.search row for row, probe under one piece") {
     val local = IvfServe.serve(small)
+    assert(local.size * 8 < IvfServe.PieceCoords)
     val qs = queryVecs(6)
     for (np <- Seq(1, 2, 6)) {
       val dist = distributed(small, qs, 15, np)
@@ -181,7 +196,8 @@ class EmbeddedServeKernelSpec extends graft.SparkSpec {
 
   test("LocalIvf == Ivf.search row for row, probe of several pieces") {
     val local = IvfServe.serve(large)
-    assert(local.size == 20000 && local.size > IvfServe.PieceRows)
+    // 8-d rows: a piece holds PieceCoords / 8 of them
+    assert(local.size == 40000 && local.size > IvfServe.PieceCoords / 8)
     val qs = queryVecs(4)
     val dist = distributed(large, qs, 25, 3)
     qs.indices.foreach { i =>
@@ -189,7 +205,7 @@ class EmbeddedServeKernelSpec extends graft.SparkSpec {
     }
     // k <= 0 returns every probed row in (score, id) order
     val all = local.search(qs(0), 0, 3)
-    assert(all.size == 20000)
+    assert(all.size == 40000)
     assert(all == all.sortBy { case (id, s) => (s, id) })
   }
 
@@ -310,5 +326,21 @@ class EmbeddedServeKernelSpec extends graft.SparkSpec {
         assert(local.search(fs, None, None).map(_._1) == expected(fs), s"$fs")
       }
     }
+    // threads racing on the same new filters all read the one evaluation
+    val fresh = (0 until 40).map(i => Seq(FilterGroup(Seq(Gt("price", i * 0.37)))))
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    try {
+      val jobs = (0 until 4).map { t =>
+        pool.submit(new java.util.concurrent.Callable[Seq[(Seq[FilterGroup], Seq[Long])]] {
+          def call() = fresh.indices.map { i =>
+            val fs = fresh((i + t * 7) % fresh.size)
+            fs -> local.search(fs, None, None).map(_._1)
+          }
+        })
+      }
+      jobs.flatMap(_.get()).foreach { case (fs, got) =>
+        assert(got == expected(fs), s"$fs")
+      }
+    } finally pool.shutdown()
   }
 }
