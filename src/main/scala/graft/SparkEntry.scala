@@ -170,6 +170,15 @@ object SparkEntry {
       Dedup.duplicateClusters(
         Dedup.minhashPairs(docs(s, dir), "doc_id", "text")).persist())
 
+  /** The total HNSW beam the oracle-checked queries search with: each of
+    * an index's n shards gets ceil(ExhaustiveEf / n) of it
+    * (`Hnsw.shardBeam`), at least 2,048 up to 32 shards, more than the
+    * whole corpus at correctness scale (2,000 vectors at sf0.1). So the
+    * beam never stops early and visits every node of each connected shard
+    * graph — exhaustive, exact search, which the flat SQL oracles can
+    * check. */
+  private val ExhaustiveEf = 1 << 16
+
   private val hnswCache =
     scala.collection.concurrent.TrieMap.empty[String, Hnsw.Index]
   private def hnswIndex(s: SparkSession, dir: String): Hnsw.Index =
@@ -879,7 +888,8 @@ object SparkEntry {
           "n_code_argmin", "n_adc_decode", "n_monotone")
     }),
     "hnsw_knn" -> ((s, dir) =>
-      knnOut(Hnsw.searchIndex(hnswIndex(s, dir), queryVec(s, dir), 10))),
+      knnOut(Hnsw.searchIndex(hnswIndex(s, dir), queryVec(s, dir), 10,
+        efSearch = ExhaustiveEf))),
     // cosine HNSW: normalize-at-insert (distance.go:70-81), beam navigates
     // L2² on unit vectors (= 2·(1−cos), same ordering), final scores are
     // 1−cos. Exhaustive beam at correctness scale ⇒ the exact-cosine
@@ -888,7 +898,7 @@ object SparkEntry {
     // 5dp-boundary margin on this table is 2.9e-6, 30× the error.
     "hnsw_cosine" -> ((s, dir) =>
       Hnsw.searchIndex(hnswCosIndex(s, dir), queryVec(s, dir), 10,
-          efSearch = 500)
+          efSearch = ExhaustiveEf)
         .select(col("id").as("vec_id"), round(col("score"), 5).as("dist"))
         .orderBy(col("dist"), col("vec_id"))),
     // document pre-filter pushed into the IVF search (WithDocumentIDs,
@@ -913,7 +923,7 @@ object SparkEntry {
     "hnsw_prefilter" -> ((s, dir) => {
       val e = emb(s, dir)
       knnOut(Hnsw.searchIndex(hnswIndex(s, dir), queryVec(s, dir), 10,
-        efSearch = 400,
+        efSearch = ExhaustiveEf,
         candidates = Some(e.filter(col("label").isin(1, 2, 3)).select("id"))))
     }),
     // hard delete + flush: shards drop nodes, rewire edges, re-elect entry
@@ -921,11 +931,12 @@ object SparkEntry {
     "hnsw_delete" -> ((s, dir) =>
       knnOut(Hnsw.searchIndex(
         hnswDeleted(s, dir, Seq(1L, 2L, 3L, 4L, 5L)),
-        queryVec(s, dir), 10))),
+        queryVec(s, dir), 10, efSearch = ExhaustiveEf))),
     // node-based "more like this" on the HNSW index
     // (hnsw_index_search.go:212-226)
     "hnsw_nodes" -> ((s, dir) =>
-      knnOut(Hnsw.searchByNodes(hnswIndex(s, dir), Seq(0L), 10))),
+      knnOut(Hnsw.searchByNodes(hnswIndex(s, dir), Seq(0L), 10,
+        efSearch = ExhaustiveEf))),
     // graph persistence round trip: dump per-node rows, restore WITHOUT
     // re-inserting, search the loaded graphs (exhaustive-exact at this
     // scale — the flat oracle applies to the reloaded index too)
@@ -935,7 +946,8 @@ object SparkEntry {
         Hnsw.write(hnswIndex(s, dir), p)
         p
       }
-      knnOut(Hnsw.searchIndex(Hnsw.read(s, path), queryVec(s, dir), 10))
+      knnOut(Hnsw.searchIndex(Hnsw.read(s, path), queryVec(s, dir), 10,
+        efSearch = ExhaustiveEf))
     }),
     // LSH-bucketed ANN: planes are a CLOSED-FORM hash (Similarity.planes),
     // so the oracle reproduces the ENTIRE pipeline — plane values, sign
@@ -1074,7 +1086,7 @@ object SparkEntry {
       Hybrid.searchWith(
         meta,
         Seq(FilterGroup(Seq(Filter.Eq("lang", "en"), Filter.Gt("n_chars", 100)))),
-        Some(Hybrid.HnswLeg(hnswCosIndex(s, dir), efSearch = 500)),
+        Some(Hybrid.HnswLeg(hnswCosIndex(s, dir), efSearch = ExhaustiveEf)),
         Some(queryVec(s, dir)),
         Some(corpus(s, dir)), Some("spark query join table"),
         Hybrid.Config(k = 10, fusion = Hybrid.Rrf, metric = Metric.Cosine))
@@ -1102,7 +1114,7 @@ object SparkEntry {
     // (the reference's hybrid takes any VectorIndex,
     // hybrid_search_index.go:76; modality matrix
     // hybrid_search_index_test.go:10-1101). At sf corpus sizes the beam
-    // (efSearch=400) covers every shard exhaustively, so the leg is exact
+    // (efSearch = ExhaustiveEf) covers every shard, so the leg is exact
     // and the hybrid_full oracle applies verbatim
     "hybrid_hnsw" -> ((s, dir) => {
       val meta = docs(s, dir).select(col("doc_id").as("id"), col("lang"),
@@ -1110,7 +1122,7 @@ object SparkEntry {
       Hybrid.searchWith(
         meta,
         Seq(FilterGroup(Seq(Filter.Eq("lang", "en"), Filter.Gt("n_chars", 100)))),
-        Some(Hybrid.HnswLeg(hnswIndex(s, dir), efSearch = 400)),
+        Some(Hybrid.HnswLeg(hnswIndex(s, dir), efSearch = ExhaustiveEf)),
         Some(queryVec(s, dir)),
         Some(corpus(s, dir)), Some("spark query join table"),
         Hybrid.Config(k = 10, fusion = Hybrid.Rrf))
@@ -1201,7 +1213,7 @@ object SparkEntry {
           col("source"), col("n_chars"))
         val p = fixtureScratchDir("graft-hybany", dir)
         Hybrid.writeAny(p, Some(meta),
-          Some(Hybrid.HnswLeg(hnswIndex(s, dir), efSearch = 400)),
+          Some(Hybrid.HnswLeg(hnswIndex(s, dir), efSearch = ExhaustiveEf)),
           Some(corpus(s, dir)), Hybrid.Config(k = 10, fusion = Hybrid.Rrf))
         p
       }
@@ -1850,17 +1862,17 @@ object SparkEntry {
     // the facade with an INCREMENTAL HNSW vector leg (HnswLog: seed once,
     // copy-on-write shard insertion per append, soft-delete marks per
     // delete — the reference's store template over its lowest-latency
-    // index kind, storage.go:321-347). efSearch=800 >= every shard's node
-    // count at correctness scale, so the beam is exhaustive and the
-    // store_facade oracle applies verbatim to the identical mutation
-    // sequence
+    // index kind, storage.go:321-347). ExhaustiveEf gives every shard a
+    // beam wider than its node count at correctness scale, so the beam is
+    // exhaustive and the store_facade oracle applies verbatim to the
+    // identical mutation sequence
     "store_facade_hnsw" -> ((s, dir) => {
       val hs = fixture("store_facade_hnsw", dir) {
         val h = new graft.store.HybridStore(s,
           fixtureScratchDir("graft-sfhnsw", dir),
           Hybrid.Config(k = 10, fusion = Hybrid.Rrf),
           incrementalHnsw =
-            Some(graft.store.HybridStore.HnswSpec(efSearch = 800)))
+            Some(graft.store.HybridStore.HnswSpec(efSearch = ExhaustiveEf)))
         val d = docs(s, dir).select(col("doc_id").as("id"), col("text"),
             col("lang"), col("source"), col("n_chars"))
           .join(emb(s, dir).select(col("id"), col("vector")), Seq("id"), "left")
@@ -2527,9 +2539,10 @@ object SparkEntry {
          |ORDER BY dist ASC, vec_id ASC""".stripMargin,
     "knn_prefilter" -> l2Sql("WHERE e.label IN (1, 2, 3)"),
     // HNSW at correctness scale is provably EXACT, so the flat-kNN SQL
-    // oracle applies: sf0.01 has 500 vectors across >=4 shard graphs
-    // (<=125 nodes each, all under efSearch), the beam's early-stop
-    // (res.size >= ef) never fires, and each shard graph is connected
+    // oracle applies: the query searches with ExhaustiveEf, whose share per
+    // shard exceeds every shard's node count (sf0.1 has 2,000 vectors), so
+    // the beam's early-stop (res.size >= ef) never fires, and each shard
+    // graph is connected
     // (every insert links to its efConstruction-beam neighborhood, which
     // at these sizes is the whole shard) — the search visits EVERY node
     // and degenerates to exhaustive exact search, per shard, merged

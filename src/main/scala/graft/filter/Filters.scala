@@ -88,8 +88,11 @@ object Filters {
     case In(c, vs)        => col(c).isin(vs: _*)
     // comet's NotIn = allDocs ANDNOT union(values) — docs where the field is
     // missing DO qualify (metadata_index.go:311-323). SQL NOT IN is
-    // null-rejecting, so add the isNull branch explicitly.
-    case NotIn(c, vs)     => col(c).isNull || !col(c).isin(vs: _*)
+    // null-rejecting, so add the isNull branch explicitly, and drop null
+    // values: a null in the list would make `isin` null on every row it
+    // does not match, and a null value's bitmap holds no doc.
+    case NotIn(c, vs)     =>
+      col(c).isNull || !col(c).isin(vs.filter(_ != null): _*)
     case Exists(c)        => col(c).isNotNull
     case NotExists(c)     => col(c).isNull
     case AnyIn(c, vs)     => arrays_overlap(col(c), array(vs.map(lv): _*))

@@ -287,46 +287,137 @@ object Hybrid {
 
   // ------------------------------------------------------ embedded serving
 
-  /** Local fusion twins of [[graft.fusion.Fusion]] — same formulas, same
-    * tie-breaks, on in-memory (id, score) lists (fusion.go:131-306). */
-  private def localWeighted(v: Seq[(Long, Double)], t: Seq[(Long, Double)],
-                            vw: Double, tw: Double): Seq[(Long, Double)] = {
-    val vm = v.toMap; val tm = t.toMap
-    (vm.keySet ++ tm.keySet).toSeq.map(id =>
-      (id, vm.getOrElse(id, 0.0) * vw + tm.getOrElse(id, 0.0) * tw))
-  }
-  private def localRrf(v: Seq[(Long, Double)], t: Seq[(Long, Double)],
-                       k: Double): Seq[(Long, Double)] = {
-    // 0-based ranks: vector ascends (distances), text descends (relevance)
-    val vr = v.sortBy { case (id, s) => (s, id) }
-      .zipWithIndex.map { case ((id, _), r) => id -> r }.toMap
-    val tr = t.sortBy { case (id, s) => (-s, id) }
-      .zipWithIndex.map { case ((id, _), r) => id -> r }.toMap
-    (vr.keySet ++ tr.keySet).toSeq.map { id =>
-      (id, vr.get(id).map(r => 1.0 / (k + r)).getOrElse(0.0) +
-           tr.get(id).map(r => 1.0 / (k + r)).getOrElse(0.0))
+  /** Embedded fusion: the local twins of [[graft.fusion.Fusion]] — same
+    * formulas, same tie-breaks (fusion.go:131-306) — over primitive copies
+    * of the two legs' (id, score) lists, whose ids are distinct within a
+    * leg. The final top k comes out of one [[FlatKnn.BoundedTopK]] on
+    * (-score, id), so the order is score descending, id ascending
+    * (hybrid_search_index.go:595-612). */
+  private[graft] object LocalFusion {
+
+    /** The top `k` of one fused or single-leg list. */
+    def top(xs: Seq[(Long, Double)], k: Int): Seq[(Long, Double)] = {
+      val heap = new FlatKnn.BoundedTopK(math.max(k, 0))
+      xs.foreach { case (id, s) => heap.offer(-s, id) }
+      best(heap)
     }
-  }
-  private def localMax(v: Seq[(Long, Double)],
-                       t: Seq[(Long, Double)]): Seq[(Long, Double)] = {
-    val vm = v.toMap; val tm = t.toMap
-    (vm.keySet ++ tm.keySet).toSeq.map { id =>
-      (vm.get(id), tm.get(id)) match {
-        case (Some(a), Some(b)) => (id, math.max(a, b))
-        case (Some(a), None)    => (id, a)
-        case (None, b)          => (id, b.get)
+
+    /** The top `cfg.k` of the two legs fused by `cfg.fusion`. An id
+      * missing from a leg scores 0 there (weighted, RRF), takes the other
+      * leg's score (max) or drops out (min). */
+    def fuse(v: Seq[(Long, Double)], t: Seq[(Long, Double)],
+             cfg: Config): Seq[(Long, Double)] = {
+      val (vi, vs) = unzip(v)
+      val (ti, ts) = unzip(t)
+      // inT(i) = index in t of v's i-th id, or -1; matched marks t entries
+      val byId = order(ti.length, (a, b) => ti(a) < ti(b))
+      val matched = new Array[Boolean](ti.length)
+      val inT = Array.tabulate(vi.length) { i =>
+        val j = find(ti, byId, vi(i))
+        if (j >= 0) matched(j) = true
+        j
       }
+      // score(i, j): the fused score of v's i-th and t's j-th entry, either
+      // index -1 when the id is missing from that leg
+      val score: (Int, Int) => Double = cfg.fusion match {
+        case WeightedSum =>
+          val (vw, tw) = (cfg.vectorWeight, cfg.textWeight)
+          (i, j) => (if (i >= 0) vs(i) else 0.0) * vw +
+            (if (j >= 0) ts(j) else 0.0) * tw
+        case Rrf =>
+          // 0-based ranks: vector ascends (distances), text descends
+          // (relevance), ties by id
+          val k = cfg.rrfK
+          val vr = ranks(order(vi.length, (a, b) =>
+            vs(a) < vs(b) || (vs(a) == vs(b) && vi(a) < vi(b))))
+          val tr = ranks(order(ti.length, (a, b) =>
+            ts(a) > ts(b) || (ts(a) == ts(b) && ti(a) < ti(b))))
+          (i, j) => (if (i >= 0) 1.0 / (k + vr(i)) else 0.0) +
+            (if (j >= 0) 1.0 / (k + tr(j)) else 0.0)
+        case MaxF =>
+          (i, j) => if (i < 0) ts(j) else if (j < 0) vs(i) else math.max(vs(i), ts(j))
+        case MinF =>
+          (i, j) => math.min(vs(i), ts(j))
+      }
+      val both = cfg.fusion == MinF // min fuses only ids found by both legs
+      val heap = new FlatKnn.BoundedTopK(math.max(cfg.k, 0))
+      var i = 0
+      while (i < vi.length) {
+        val j = inT(i)
+        if (j >= 0 || !both) heap.offer(-score(i, j), vi(i))
+        i += 1
+      }
+      var j = 0
+      while (j < ti.length) {
+        if (!matched(j) && !both) heap.offer(-score(-1, j), ti(j))
+        j += 1
+      }
+      best(heap)
     }
-  }
-  private def localMin(v: Seq[(Long, Double)],
-                       t: Seq[(Long, Double)]): Seq[(Long, Double)] = {
-    val tm = t.toMap
-    v.flatMap { case (id, a) => tm.get(id).map(b => (id, math.min(a, b))) }
+
+    private def best(heap: FlatKnn.BoundedTopK): Seq[(Long, Double)] =
+      heap.sortedEntries.map { case (negS, id) => (id, -negS) }
+
+    private def unzip(xs: Seq[(Long, Double)]): (Array[Long], Array[Double]) = {
+      val ids = new Array[Long](xs.length)
+      val scores = new Array[Double](xs.length)
+      var i = 0
+      xs.foreach { case (id, s) => ids(i) = id; scores(i) = s; i += 1 }
+      (ids, scores)
+    }
+
+    /** Index of `id` in `ids` by binary search over `byId` (the indexes of
+      * `ids` in ascending id order), or -1. */
+    private def find(ids: Array[Long], byId: Array[Int], id: Long): Int = {
+      var lo = 0
+      var hi = byId.length - 1
+      while (lo <= hi) {
+        val mid = (lo + hi) >>> 1
+        val x = ids(byId(mid))
+        if (x < id) lo = mid + 1
+        else if (x > id) hi = mid - 1
+        else return byId(mid)
+      }
+      -1
+    }
+
+    /** rank(i) = position of index i in `ord`. */
+    private def ranks(ord: Array[Int]): Array[Int] = {
+      val r = new Array[Int](ord.length)
+      var p = 0
+      while (p < ord.length) { r(ord(p)) = p; p += 1 }
+      r
+    }
+
+    /** The indexes 0 until n sorted by `before` (a strict order): a
+      * bottom-up merge sort on primitive int arrays. */
+    private def order(n: Int, before: (Int, Int) => Boolean): Array[Int] = {
+      var a = Array.range(0, n)
+      var b = new Array[Int](n)
+      var w = 1
+      while (w < n) {
+        var lo = 0
+        while (lo < n) {
+          val mid = math.min(lo + w, n)
+          val hi = math.min(lo + 2 * w, n)
+          var i = lo; var j = mid; var o = lo
+          while (o < hi) {
+            if (j >= hi || (i < mid && !before(a(j), a(i)))) { b(o) = a(i); i += 1 }
+            else { b(o) = a(j); j += 1 }
+            o += 1
+          }
+          lo = hi
+        }
+        val t = a; a = b; b = t
+        w *= 2
+      }
+      a
+    }
   }
 
-  /** Entries per generation of [[LocalHybrid]]'s filter memo (two
-    * generations, so at most 64 memoized filters). */
-  private val MemoGeneration = 32
+  /** Entries of [[LocalHybrid]]'s filter memo, least recently used first
+    * out. */
+  private val MemoEntries = 64
 
   /** One meta row as the `field => value` view the local filter evaluator
     * reads; `row` moves it along the rows. Each field name resolves to its
@@ -369,7 +460,7 @@ object Hybrid {
     * structures ([[FlatKnn.LocalFlat]], [[BM25.LocalBM25]]); the metadata
     * filter runs the [[Filters.matchesLocal]] evaluator (spec-pinned equal
     * to the compiled Column) over collected rows once per distinct filter
-    * (a two-generation memo of at most 64 filters keeps the result), and
+    * (a least-recently-used memo of 64 filters keeps the result), and
     * the candidate set is pushed into BOTH modalities as a scan predicate,
     * the per-index document-filter composition. Results match [[search]]
     * up to floating-point ulps in BM25 sums. */
@@ -410,16 +501,17 @@ object Hybrid {
     // serving-path norm — then cost one lookup instead of a full scan of
     // the rows per search.
     //
-    // The memo holds two generations of at most MemoGeneration entries
-    // each, so at most 64 in all: a hit in the old map is promoted into the
-    // current one, and a full current map becomes the old one (dropping
-    // the previous old map). A repeating filter therefore survives any run
-    // of one-off filters shorter than a generation, instead of being
-    // flushed with them, and an unbounded stream of distinct filters
-    // cannot grow driver memory.
+    // The memo keeps the MemoEntries most recently used filters (an
+    // access-ordered LinkedHashMap), so a repeating filter survives any run
+    // of one-off filters shorter than the memo, and an unbounded stream of
+    // distinct filters cannot grow driver memory.
     private val memoLock = new Object
-    private var memoCur = new java.util.HashMap[Seq[FilterGroup], Candidates]()
-    private var memoOld = new java.util.HashMap[Seq[FilterGroup], Candidates]()
+    private val memo =
+      new java.util.LinkedHashMap[Seq[FilterGroup], Candidates](16, 0.75f, true) {
+        override def removeEldestEntry(
+            e: java.util.Map.Entry[Seq[FilterGroup], Candidates]): Boolean =
+          this.size > MemoEntries
+      }
 
     /** A memoized filter's candidates, evaluated on first read outside the
       * memo lock; threads reading the same entry meanwhile wait for that
@@ -440,15 +532,10 @@ object Hybrid {
 
     private def candidatesFor(filters: Seq[FilterGroup]): IdSet = {
       val entry = memoLock.synchronized {
-        var e = memoCur.get(filters)
+        var e = memo.get(filters)
         if (e == null) {
-          e = memoOld.remove(filters)
-          if (e == null) e = new Candidates(filters)
-          if (memoCur.size >= MemoGeneration) {
-            memoOld = memoCur
-            memoCur = new java.util.HashMap[Seq[FilterGroup], Candidates]()
-          }
-          memoCur.put(filters, e)
+          e = new Candidates(filters)
+          memo.put(filters, e)
         }
         e
       }
@@ -471,15 +558,11 @@ object Hybrid {
       val vecScores = qvec.flatMap(q => vecSearch.map(f => f(q, cfg.k, pred)))
       val txtScores = qtext.flatMap(q => bm25.map(_.search(q, cfg.k, pred)))
 
-      val fused = (vecScores, txtScores) match {
-        case (Some(v), Some(t)) => cfg.fusion match {
-          case WeightedSum => localWeighted(v, t, cfg.vectorWeight, cfg.textWeight)
-          case Rrf         => localRrf(v, t, cfg.rrfK)
-          case MaxF        => localMax(v, t)
-          case MinF        => localMin(v, t)
-        }
-        case (Some(v), None) => v
-        case (None, Some(t)) => t
+      // final order: score DESC, id asc, limit k (:595-612)
+      (vecScores, txtScores) match {
+        case (Some(v), Some(t)) => LocalFusion.fuse(v, t, cfg)
+        case (Some(v), None)    => LocalFusion.top(v, cfg.k)
+        case (None, Some(t))    => LocalFusion.top(t, cfg.k)
         case (None, None) =>
           // metadata-only: candidates score 1.0, ties reduce to id asc
           // (hybrid_search_index.go:588-593); with no filters either, the
@@ -487,8 +570,6 @@ object Hybrid {
           candidates.map(_.ids.take(cfg.k).toSeq.map(id => (id, 1.0))) // pre-sorted
             .getOrElse(Seq.empty)
       }
-      // final order: score DESC, id asc, limit k (:595-612)
-      fused.sortBy { case (id, s) => (-s, id) }.take(cfg.k)
     }
   }
 
@@ -515,12 +596,12 @@ object Hybrid {
   /** Embedded hybrid over an HNSW-served vector leg — the reference's
     * any-index in-process hybrid (hybrid_search_index.go:76 composes any
     * VectorIndex). Filtered queries hand the leg the filter's [[IdSet]]:
-    * each shard holding fewer live candidates than the beam width
-    * `max(efSearch, k)` scores them exactly, so selective filters get the
-    * exact filtered top-k; larger sets are checked inside the beam, which
-    * is approximate per the index (doc on [[Hnsw.searchIndex]]). The
-    * metric is the INDEX's (fail-fast mismatch, same rule as the
-    * distributed legs). */
+    * each shard holding fewer live candidates than `max(efSearch, k)`
+    * scores them exactly, so selective filters get the exact filtered
+    * top-k; larger sets are checked inside the beam, which is approximate
+    * per the index (doc on [[Hnsw.searchIndex]]). `efSearch` is the total
+    * beam across the index's shards. The metric is the INDEX's (fail-fast
+    * mismatch, same rule as the distributed legs). */
   def serveHnsw(meta: DataFrame, index: Hnsw.Index, corpus: BM25Corpus,
                 cfg: Config = Config(),
                 efSearch: Int = Hnsw.DefaultEfSearch): LocalHybrid = {

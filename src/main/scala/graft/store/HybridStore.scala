@@ -955,13 +955,14 @@ object HybridStore {
 
   /** Build/search parameters for the incremental HNSW vector leg
     * (`incrementalHnsw`): `m`/`efConstruction` shape the graph at seed
-    * and insert time, `efSearch` is the per-search beam width the leg
-    * serves with. With `persist` (default), the mutated graph is written
-    * under `root/_hnsw` at [[HybridStore.close]] AND after every
-    * [[HybridStore.compact]] (amortized into the rewrite the compaction
-    * already pays), so the next process reopens by loading + replaying
-    * only post-persist mutations instead of re-running the seed build —
-    * even after a crash, as long as one compaction had landed. */
+    * and insert time, `efSearch` is the per-search beam the leg serves
+    * with, the total across the graph's shards (each shard searches its
+    * share, `Hnsw.shardBeam`). With `persist` (default), the mutated
+    * graph is written under `root/_hnsw` at [[HybridStore.close]] AND
+    * after every [[HybridStore.compact]] (amortized into the rewrite the
+    * compaction already pays), so the next process reopens by loading +
+    * replaying only post-persist mutations instead of re-running the seed
+    * build — even after a crash, as long as one compaction had landed. */
   final case class HnswSpec(m: Int = 16, efConstruction: Int = 200,
                             efSearch: Int = graft.vector.Hnsw.DefaultEfSearch,
                             persist: Boolean = true)

@@ -612,9 +612,9 @@ object Hnsw {
     /** @param allowed optional doc-id predicate (comet WithDocumentIDs,
       *                 hnsw_index_search.go:322-325); deleted nodes are
       *                 always excluded. An [[IdSet]] with fewer live
-      *                 members in this shard than the beam width is scored
-      *                 exactly (see [[searchHeap]]); any other predicate
-      *                 gates results inside an unfiltered beam. */
+      *                 members in this graph than `max(efSearch, k)` is
+      *                 scored exactly (see [[searchHeap]]); any other
+      *                 predicate gates results inside an unfiltered beam. */
     def search(q: Array[Float], k: Int, efSearch: Int,
                allowed: Long => Boolean = null): Seq[(Long, Double)] =
       searchHeap(q, k, efSearch, allowed).sortedEntries
@@ -625,28 +625,29 @@ object Hnsw {
       * directly. Results are ordered by (distance, doc id).
       *
       * Two regimes, chosen per shard. When `allowed` is an [[IdSet]] and
-      * this shard holds FEWER live members of it than the beam width
-      * `max(efSearch, k)`, those members are scored exactly with the same
-      * [[distQ]] kernel and the beam is skipped: a beam over so few
-      * admitted nodes can never fill and stop early, so it would walk the
-      * whole layer-0 component anyway. The exact answer equals the beam's
-      * whenever the admitted nodes are reachable, and is never worse.
-      * Otherwise the beam runs and its first k are kept. At a distance tie
-      * on the cut the exact path keeps the smaller doc id; the beam keeps
-      * the smaller internal node index. */
+      * this shard holds FEWER live members of it than `max(efSearch, k)`,
+      * those members are scored exactly with the same [[distQ]] kernel and
+      * the beam is skipped: a beam over so few admitted nodes can never
+      * fill and stop early, so it would walk the whole layer-0 component
+      * anyway. The exact answer equals the beam's whenever the admitted
+      * nodes are reachable, and is never worse. Otherwise the beam runs,
+      * [[shardBeam]]`(efSearch, k, nShards)` wide, and its first k are
+      * kept. At a distance tie on the cut the exact path keeps the smaller
+      * doc id; the beam keeps the smaller internal node index.
+      *
+      * @param nShards how many shards share `efSearch` as their total beam
+      *                (1 for a graph searched on its own) */
     private[vector] def searchHeap(q: Array[Float], k: Int, efSearch: Int,
-                                   allowed: Long => Boolean = null): FlatKnn.BoundedTopK = {
+                                   allowed: Long => Boolean = null,
+                                   nShards: Int = 1): FlatKnn.BoundedTopK = {
       // k <= 0 = all the BEAM found (limiter.go:12-17 sanitizes k at the
       // RESULTS, the beam stays efSearch wide): capacity covers everything
-      // the ef-bounded beam can return; a positive k also widens the beam
-      // (a k>ef search must be able to fill k)
+      // the ef-bounded beam can return
       val kk = if (k <= 0) ids.length else k
-      val beamK = if (k <= 0) efSearch else k
-      val width = math.max(efSearch, beamK)
       val heap = new FlatKnn.BoundedTopK(kk)
       if (entry < 0) return heap
       val few = allowed match {
-        case c: IdSet => liveMembers(c, width)
+        case c: IdSet => liveMembers(c, math.max(efSearch, k))
         case _        => null
       }
       if (few != null) {
@@ -668,7 +669,8 @@ object Hnsw {
         ep = r._1; epD = r._2
         layer -= 1
       }
-      val res = searchLayer(q, Array(ep), Array(epD), width, 0, pred)
+      val res = searchLayer(q, Array(ep), Array(epD),
+        shardBeam(efSearch, k, nShards), 0, pred)
       val sorted = res.sortedPairs
       var i = 0
       while (i < sorted.length && i < kk) {
@@ -829,10 +831,24 @@ object Hnsw {
     def unpersist(): Unit = { graphs.unpersist(); () }
   }
 
-  /** Default beam width; an `efSearch <= 0` argument falls back to this —
-    * the reference's WithEfSearch treats zero/negative as "use the index
+  /** Default beam width, the TOTAL across an index's shards (see
+    * [[shardBeam]]); an `efSearch <= 0` argument falls back to this — the
+    * reference's WithEfSearch treats zero/negative as "use the index
     * default" (hnsw_index_search_test.go:1209-1289). */
   val DefaultEfSearch: Int = 200
+
+  /** Beam width of one of `nShards` shards when `efSearch` is the total
+    * beam across them: `max(k, ceil(efSearch / nShards))` for `k > 0`.
+    * The reference searches one graph with one `efSearch` beam
+    * (hnsw_index_search.go); a full beam in every shard would make
+    * per-query work grow with the shard count, which follows the core
+    * count, rather than with the corpus. Shards are close to equal in size
+    * (hash-routed or repartitioned), so each gets an equal share; a
+    * positive k still widens every beam so each shard can fill k. `k <= 0`
+    * ("all the beam found") keeps the full `efSearch` beam per shard. */
+  private[vector] def shardBeam(efSearch: Int, k: Int, nShards: Int): Int =
+    if (k <= 0) efSearch
+    else math.max(k, -Math.floorDiv(-efSearch, nShards))
 
   /** Metrics the graph supports — the reference's exact `NewDistance` set
     * (distance.go:94-107: Euclidean, L2Squared, Cosine). Cosine follows the
@@ -911,17 +927,20 @@ object Hnsw {
     *                   METRIC's score space (L2 distance, L2² for L2Sq,
     *                   1−cos for a cosine-built index) — the cutoff applies
     *                   after [[convertScore]] (hnsw_index_search.go:327-329)
+    * @param efSearch   the TOTAL beam across the index's shards: each
+    *                   shard searches with a [[shardBeam]] share of it
+    *                   (`<= 0` falls back to [[DefaultEfSearch]])
     * @param candidates optional (id) frame restricting results (comet
     *                   WithDocumentIDs, hnsw_index_search.go:322-325) — the
     *                   ids are collected and broadcast as one [[IdSet]]
     *                   (the reference's filter is the same in-memory id
     *                   set). A shard holding fewer live candidates than
-    *                   the beam width `max(efSearch, k)` scores them
-    *                   exactly, so a selective filter returns the exact
-    *                   filtered top-k; a larger set is checked inside the
-    *                   shard's unfiltered beam. Embedded
-    *                   [[LocalServing.search]] with the same [[IdSet]]
-    *                   takes the same path, row for row.
+    *                   `max(efSearch, k)` scores them exactly, so a
+    *                   selective filter returns the exact filtered top-k;
+    *                   a larger set is checked inside the shard's
+    *                   unfiltered beam. Embedded [[LocalServing.search]]
+    *                   with the same [[IdSet]] takes the same path, row
+    *                   for row.
     */
   def searchIndex(index: Index, queries: DataFrame, k: Int,
                   efSearch: Int = DefaultEfSearch,
@@ -943,11 +962,12 @@ object Hnsw {
           "(distributed semi-join) instead of the broadcast id set")
       spark.sparkContext.broadcast(IdSet(arr.map(_.getLong(0))))
     }
+    val nShards = index.graphs.getNumPartitions
     import spark.implicits._
     val hits = index.graphs.flatMap { g =>
       val allowed: Long => Boolean = bcCand.map(_.value).orNull
       bcQ.value.iterator.flatMap { case (qid, qv) =>
-        g.searchHeap(qv, k, ef, allowed).sortedEntries
+        g.searchHeap(qv, k, ef, allowed, nShards).sortedEntries
           .map { case (s, id) => (qid, id, convertScore(metric, s)) }
       }
     }.toDF("qid", "id", "score")
@@ -964,7 +984,9 @@ object Hnsw {
     * hnsw_index.go:98-131). Sub-millisecond-scale single-query latency for
     * indexes that fit a machine; the RDD path stays the scale-out route.
     * Shards are searched with a parallel stream and merged by (distance,
-    * id) — results identical to [[searchIndex]]. */
+    * id) — results identical to [[searchIndex]]. `efSearch` is the total
+    * beam across the shards, split by the same [[shardBeam]] rule, so
+    * per-query work follows the corpus and not the shard count. */
   final class LocalServing private[Hnsw] (graphs: Array[LocalGraph],
                                           metric: Metric = Metric.L2) {
     private val prep = prepFor(metric)
@@ -979,8 +1001,8 @@ object Hnsw {
 
     /** Top-k over every shard, ordered by (score, id). `allowed` restricts
       * results: an [[IdSet]] is scored exactly in each shard holding fewer
-      * live members than the beam width (as in [[searchIndex]]); any other
-      * predicate gates results inside the beam. */
+      * live members than `max(efSearch, k)` (as in [[searchIndex]]); any
+      * other predicate gates results inside the beam. */
     def search(q: Array[Float], k: Int, efSearch: Int = DefaultEfSearch,
                allowed: Long => Boolean = null): Seq[(Long, Double)] = {
       val ef = if (efSearch <= 0) DefaultEfSearch else efSearch
@@ -996,13 +1018,13 @@ object Hnsw {
           // shard searches stay PARALLEL; only the variable-capacity
           // absorb is serialized into the total-capacity target
           val heaps = java.util.Arrays.stream(graphs).parallel()
-            .map[FlatKnn.BoundedTopK](g => g.searchHeap(qv, k, ef, allowed))
+            .map[FlatKnn.BoundedTopK](g => g.searchHeap(qv, k, ef, allowed, graphs.length))
             .toArray(n => new Array[FlatKnn.BoundedTopK](n))
           val target = new FlatKnn.BoundedTopK(math.max(size, 1))
           heaps.foreach(target.absorb)
           target
         } else java.util.Arrays.stream(graphs).parallel()
-          .map[FlatKnn.BoundedTopK](g => g.searchHeap(qv, k, ef, allowed))
+          .map[FlatKnn.BoundedTopK](g => g.searchHeap(qv, k, ef, allowed, graphs.length))
           .reduce(null, (a: FlatKnn.BoundedTopK, b: FlatKnn.BoundedTopK) =>
             if (a == null) b else if (b == null) a else a.absorb(b))
       if (merged == null) Seq.empty

@@ -11,9 +11,9 @@ and seed the script runs `python3 perfbench/run.py --trace 0` once in each
 directory, back to back, so both sides of a pair see the same host window;
 the side that goes first alternates from seed to seed. It then prints, per
 workload and per end-to-end metric of CHANGE_DIR's BENCHMARK.json, the
-median (q1-q3) of each side, the ratio of the medians and how many pairs the
-change won. It exits non-zero when any run failed, printed `correct: false`
-or counted a failed operation.
+median (q1-q3) of each side, the ratio of the medians, how many pairs the
+change won and a verdict (see `judge`). It exits non-zero when any run
+failed, printed `correct: false` or counted a failed operation.
 """
 import argparse
 import json
@@ -42,6 +42,31 @@ def quartiles(xs):
         return xs[0], xs[0], xs[0]
     q1, med, q3 = statistics.quantiles(xs, n=4, method="inclusive")
     return q1, med, q3
+
+
+def judge(parent, change, wins, pairs, bound, lower):
+    """One metric's verdict from the (q1, median, q3) of each side, the
+    change's win count over `pairs` pairs and the metric's relative bound:
+
+    gain                the change wins at least 9 of 10 pairs and the
+                        medians differ, the change's way, by more than the
+                        parent's q1-q3 spread;
+    worse beyond bound  the change's median is worse than the parent's by
+                        more than `bound` of the parent's median;
+    unresolved          the parent's q1-q3 spread exceeds `bound` of its
+                        median, so a within-bound reading means nothing;
+    within bound        otherwise.
+    """
+    scale = abs(parent[1]) or 1.0
+    better_by = (parent[1] - change[1]) if lower else (change[1] - parent[1])
+    spread = parent[2] - parent[0]
+    if wins >= 0.9 * pairs and better_by > spread:
+        return "gain"
+    if -better_by > bound * scale:
+        return "worse beyond bound"
+    if spread > bound * scale:
+        return "unresolved"
+    return "within bound"
 
 
 def main():
@@ -81,6 +106,9 @@ def main():
                                  for m in metrics)
                 print(f"{workload} seed {seed} {side:6s} {status} {shown}", flush=True)
 
+    if args.out:
+        with open(args.out, "w") as f:
+            json.dump(runs, f, indent=1)
     print()
     for workload, by_side in runs.items():
         print(f"== {workload} ({args.pairs} pairs): parent -> change, "
@@ -100,10 +128,8 @@ def main():
             print(f"  {name} ({m['unit']}, {m['better']} is better): "
                   f"{pa[1]:.4g} ({pa[0]:.4g}-{pa[2]:.4g}) -> "
                   f"{ch[1]:.4g} ({ch[0]:.4g}-{ch[2]:.4g}), "
-                  f"x{ratio:.3f}, wins {wins}/{len(pairs)}")
-    if args.out:
-        with open(args.out, "w") as f:
-            json.dump(runs, f, indent=1)
+                  f"x{ratio:.3f}, wins {wins}/{len(pairs)}: "
+                  f"{judge(pa, ch, wins, len(pairs), m['bound'], lower)}")
     if bad:
         print("\nfailed runs:\n  " + "\n  ".join(bad))
         sys.exit(1)
