@@ -2,7 +2,8 @@ package graft
 
 import graft.filter.{Filter, Filters}
 import graft.filter.Filter._
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions.col
 
 /** `NotIn` with a null in its value list: comet's `allDocs ANDNOT
   * union(values)` keeps every doc equal to no listed value (a null value
@@ -22,12 +23,24 @@ class NotInNullSpec extends SparkSpec {
     }.toDF("id", "qty", "tag")
   }
 
+  private lazy val rows: Array[Row] = frame.collect()
+
   private def viaColumn(f: Filter): Set[Long] =
     frame.filter(Filters.compile(f)).select("id").collect().map(_.getLong(0)).toSet
 
+  /** The ids each compiled Column keeps, every filter evaluated as one
+    * projected column of a single query (a null predicate keeps no row, as
+    * in `filter`). */
+  private def viaColumns(fs: Seq[Filter]): Seq[Set[Long]] = {
+    val got = frame.select(col("id") +: fs.indices.map(i =>
+      Filters.compile(fs(i)).as(s"f$i")): _*).collect()
+    fs.indices.map(i => got.filter(r => !r.isNullAt(i + 1) && r.getBoolean(i + 1))
+      .map(_.getLong(0)).toSet)
+  }
+
   private def viaLocal(f: Filter): Set[Long] = {
     val names = frame.schema.fieldNames.zipWithIndex.toMap
-    frame.collect().filter { r =>
+    rows.filter { r =>
       Filters.matchesLocal(f, name => names.get(name).map(i =>
         if (r.isNullAt(i)) null else r.get(i)).orNull)
     }.map(_.getLong(0)).toSet
@@ -47,13 +60,16 @@ class NotInNullSpec extends SparkSpec {
       // at least one null, at a random position
       rnd.shuffle(null +: xs)
     }
-    for (trial <- 0 until 40) {
+    val cases = (0 until 40).flatMap { trial =>
       val qtys = list(rnd.nextInt(12))
       val tags = list(Seq("a", "b", "c", "x")(rnd.nextInt(4)))
       for ((field, vs) <- Seq("qty" -> qtys, "tag" -> tags);
-           f <- Seq[Filter](NotIn(field, vs), Not(In(field, vs)), In(field, vs))) {
-        assert(viaColumn(f) == viaLocal(f), s"trial $trial: $f")
-      }
+           f <- Seq[Filter](NotIn(field, vs), Not(In(field, vs)), In(field, vs)))
+        yield (trial, f)
+    }
+    val columns = viaColumns(cases.map(_._2))
+    cases.zip(columns).foreach { case ((trial, f), ids) =>
+      assert(ids == viaLocal(f), s"trial $trial: $f")
     }
   }
 }
