@@ -1849,8 +1849,9 @@ object ScaleProbe {
 
       // embedded serving: graphs collected into the driver JVM, searched
       // without job scheduling — the reference's own deployment shape.
-      // ef sweep: per-shard beam width is the latency/recall knob when the
-      // union of nShards local top-k feeds the merge — measure both so the
+      // ef sweep: efSearch, the total beam split across the shards
+      // (Hnsw.shardBeam), is the latency/recall knob when the union of
+      // nShards local top-k feeds the merge — measure both so the
       // operating point is a documented choice, not a default
       t0 = System.nanoTime()
       val serving = Hnsw.serve(hnsw)

@@ -310,12 +310,12 @@ object Hybrid {
       val (vi, vs) = unzip(v)
       val (ti, ts) = unzip(t)
       // inT(i) = index in t of v's i-th id, or -1; matched marks t entries
-      val byId = order(ti.length, (a, b) => ti(a) < ti(b))
+      val byId = Array.range(0, ti.length).sortBy(ti(_))
+      val sortedT = byId.map(ti)
       val matched = new Array[Boolean](ti.length)
       val inT = Array.tabulate(vi.length) { i =>
-        val j = find(ti, byId, vi(i))
-        if (j >= 0) matched(j) = true
-        j
+        val p = java.util.Arrays.binarySearch(sortedT, vi(i))
+        if (p >= 0) { matched(byId(p)) = true; byId(p) } else -1
       }
       // score(i, j): the fused score of v's i-th and t's j-th entry, either
       // index -1 when the id is missing from that leg
@@ -328,10 +328,8 @@ object Hybrid {
           // 0-based ranks: vector ascends (distances), text descends
           // (relevance), ties by id
           val k = cfg.rrfK
-          val vr = ranks(order(vi.length, (a, b) =>
-            vs(a) < vs(b) || (vs(a) == vs(b) && vi(a) < vi(b))))
-          val tr = ranks(order(ti.length, (a, b) =>
-            ts(a) > ts(b) || (ts(a) == ts(b) && ti(a) < ti(b))))
+          val vr = ranks(vi, vs)
+          val tr = ranks(ti, ts.map(-_))
           (i, j) => (if (i >= 0) 1.0 / (k + vr(i)) else 0.0) +
             (if (j >= 0) 1.0 / (k + tr(j)) else 0.0)
         case MaxF =>
@@ -366,52 +364,17 @@ object Hybrid {
       (ids, scores)
     }
 
-    /** Index of `id` in `ids` by binary search over `byId` (the indexes of
-      * `ids` in ascending id order), or -1. */
-    private def find(ids: Array[Long], byId: Array[Int], id: Long): Int = {
-      var lo = 0
-      var hi = byId.length - 1
-      while (lo <= hi) {
-        val mid = (lo + hi) >>> 1
-        val x = ids(byId(mid))
-        if (x < id) lo = mid + 1
-        else if (x > id) hi = mid - 1
-        else return byId(mid)
+    /** rank(i) = the 0-based position of entry i when the entries sort by
+      * (score, id) ascending. */
+    private def ranks(ids: Array[Long], scores: Array[Double]): Array[Int] = {
+      val byScore: Ordering[Int] = (a, b) => {
+        val c = java.lang.Double.compare(scores(a), scores(b))
+        if (c != 0) c else java.lang.Long.compare(ids(a), ids(b))
       }
-      -1
-    }
-
-    /** rank(i) = position of index i in `ord`. */
-    private def ranks(ord: Array[Int]): Array[Int] = {
-      val r = new Array[Int](ord.length)
-      var p = 0
-      while (p < ord.length) { r(ord(p)) = p; p += 1 }
+      val r = new Array[Int](ids.length)
+      Array.range(0, ids.length).sorted(byScore).zipWithIndex
+        .foreach { case (i, p) => r(i) = p }
       r
-    }
-
-    /** The indexes 0 until n sorted by `before` (a strict order): a
-      * bottom-up merge sort on primitive int arrays. */
-    private def order(n: Int, before: (Int, Int) => Boolean): Array[Int] = {
-      var a = Array.range(0, n)
-      var b = new Array[Int](n)
-      var w = 1
-      while (w < n) {
-        var lo = 0
-        while (lo < n) {
-          val mid = math.min(lo + w, n)
-          val hi = math.min(lo + 2 * w, n)
-          var i = lo; var j = mid; var o = lo
-          while (o < hi) {
-            if (j >= hi || (i < mid && !before(a(j), a(i)))) { b(o) = a(i); i += 1 }
-            else { b(o) = a(j); j += 1 }
-            o += 1
-          }
-          lo = hi
-        }
-        val t = a; a = b; b = t
-        w *= 2
-      }
-      a
     }
   }
 

@@ -1206,7 +1206,9 @@ object Hnsw {
     * hnsw_index.go:734-896 as columns instead of a binary dump). The
     * soft-delete set and build params (m, efConstruction) ride along —
     * the reference persists its deleted bitmap and config the same way
-    * (hnsw_index.go WriteTo, :859). */
+    * (hnsw_index.go WriteTo, :859) — and so does the shard count, which
+    * sets each shard's share of the beam ([[shardBeam]]) and which empty
+    * shards (no node rows) would otherwise lose. */
   def write(index: Index, path: String): Unit = {
     val spark = org.apache.spark.sql.SparkSession.active
     import spark.implicits._
@@ -1221,7 +1223,7 @@ object Hnsw {
     // underscore-prefixed ⇒ invisible to parquet readers of the same dir;
     // shared meta helpers + metric-name map (Pq) — one place to extend
     Pq.writeMeta(spark, path,
-      s"""{"m":${index.m},"efConstruction":${index.efConstruction},"metric":"${Pq.metricName(index.metric)}"}""")
+      s"""{"m":${index.m},"efConstruction":${index.efConstruction},"metric":"${Pq.metricName(index.metric)}","shards":${index.graphs.getNumPartitions}}""")
   }
 
   /** Persisted node rows as `(shard, (ord, id, vector, level, edges,
@@ -1252,40 +1254,32 @@ object Hnsw {
       }
 
   /** Load persisted graphs WITHOUT re-running insertion — nodes restore
-    * verbatim in insertion order, per shard, back into a resident RDD.
-    * Build params come from the persisted meta (falling back to the
-    * arguments only for pre-meta dumps), so a non-default-m index reloads
-    * with the right neighbor caps. */
+    * verbatim in insertion order, each persisted shard into its own
+    * partition ([[readRouted]] at the persisted shard count), so the
+    * reloaded index has one graph per partition like every built one, and
+    * distributed and embedded search split the beam over the same shard
+    * count whatever the session's default parallelism. Build params come
+    * from the persisted meta (falling back to the arguments only for
+    * pre-meta dumps, and to the highest persisted shard for dumps without
+    * a shard count), so a non-default-m index reloads with the right
+    * neighbor caps. */
   def read(spark: org.apache.spark.sql.SparkSession, path: String,
            m: Int = 16, efConstruction: Int = 200): Index = {
-    val txt = Pq.readMeta(spark, path)
-    val rm = "\"m\":(\\d+)".r.findFirstMatchIn(txt)
-      .map(_.group(1).toInt).getOrElse(m)
-    val re = "\"efConstruction\":(\\d+)".r.findFirstMatchIn(txt)
-      .map(_.group(1).toInt).getOrElse(efConstruction)
-    val rmet = Pq.requiredMetric(spark, path) // loud on corrupt/lost meta
-    val graphs = readNodeRows(spark, path)
-      .groupByKey()
-      .map { case (_, nodes) =>
-        val g = new LocalGraph(rm, re)
-        nodes.toSeq.sortBy(_._1).foreach { case (_, id, v, lvl, es, del) =>
-          g.loadNode(id, v, lvl, es, del)
-        }
-        g.trimBuf()
-        g
-      }.persist(org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
-    graphs.count()
-    Index(graphs, rm, re, rmet)
+    val shards = "\"shards\":(\\d+)".r.findFirstMatchIn(Pq.readMeta(spark, path))
+      .map(_.group(1).toInt).getOrElse {
+        val top = spark.read.parquet(path).agg(max(col("shard"))).head()
+        if (top.isNullAt(0)) 1 else top.getInt(0) + 1
+      }
+    readRouted(spark, path, shards, m, efConstruction)
   }
 
   /** [[read]] variant that restores every persisted shard into the
     * PARTITION its id routing expects (shard s → partition s of an
     * `nShards`-partition RDD, empty shards included) — the invariant
     * [[add]]'s floorMod routing and therefore replace-in-place depend
-    * on. [[read]]'s arbitrary groupByKey placement is fine for a frozen
-    * serving index but NOT for an incrementally maintained one
-    * ([[HnswLog]]); a re-added id would land in a different shard than
-    * its old node and search would surface both. */
+    * on. An incrementally maintained index ([[HnswLog]]) must reload at
+    * its routing's shard count, or a re-added id would land in a
+    * different shard than its old node and search would surface both. */
   def readRouted(spark: org.apache.spark.sql.SparkSession, path: String,
                  nShards: Int, m: Int = 16,
                  efConstruction: Int = 200): Index = {

@@ -15,13 +15,6 @@ object TestSpark {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
       .config("spark.ui.enabled", "false")
-      // The suites run thousands of distinct plans through one session;
-      // Spark's default 100-entry generated-code cache evicts the shapes
-      // the store soaks repeat every step, and recompiling them (Janino,
-      // with class lookups across every jar on the classpath) took ~45% of
-      // executor CPU in LogLifecycleSpec's store soak. With 2,000 entries
-      // a full run on a 4-core host took 1,783 s instead of 2,336 s.
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
