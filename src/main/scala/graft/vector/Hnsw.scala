@@ -962,6 +962,9 @@ object Hnsw {
           "(distributed semi-join) instead of the broadcast id set")
       spark.sparkContext.broadcast(IdSet(arr.map(_.getLong(0))))
     }
+    // one graph per partition (build, buildRouted, add, read and
+    // readRouted all keep it), so this is the graph count LocalServing
+    // splits the beam over
     val nShards = index.graphs.getNumPartitions
     import spark.implicits._
     val hits = index.graphs.flatMap { g =>
