@@ -5,7 +5,7 @@ import org.apache.spark.sql.DataFrame
 /** Frame helpers shared across the library.
   *
   * [[free]] reclaims the cached frames of the incremental store legs (the
-  * [[PieceLog]] core) and the scale probes. Durable pieces are
+  * [[PieceLog]] core). Durable pieces are
   * `.persist()`ed parquet reads, which the cache-manager `unpersist`
   * frees. Non-durable pieces and every marker/df-delta/scratch frame are
   * `localCheckpoint`ed, and `Dataset.unpersist` is a NO-OP for those — the

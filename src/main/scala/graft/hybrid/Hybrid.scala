@@ -445,15 +445,10 @@ object Hybrid {
     def vecDistEvals: Option[Long] = Option(vecWork).map(_())
 
     /** True when the handle holds metadata as ONE primitive long column
-      * (the id-only packed path) instead of a boxed row per doc — the
-      * observable the 10M serve gate checks structurally, because JVM
-      * heap-delta measurements are GC-noise-bound at that scale. */
+      * (the id-only packed path, 8 B per doc) instead of a boxed row per
+      * doc — checked structurally, because JVM heap-delta measurements
+      * are GC-noise-bound at corpus scale. */
     def packedMeta: Boolean = metaRows == null
-
-    /** Resident bytes of the metadata representation itself (the packed
-      * id column; boxed-row handles report a lower bound of 8 B/doc +
-      * the rows, which this does not attempt to size). */
-    def metaBytes: Long = metaIds.length * 8L
 
     // Per-filter candidate memo: the reference's metadata index answers a
     // filter from precomputed roaring bitmaps (metadata_index.go:579-698),

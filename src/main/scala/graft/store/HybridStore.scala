@@ -425,8 +425,7 @@ final class HybridStore(spark: SparkSession, root: String,
     // collapse the derived logs' pieces into one, tagged with the
     // compacted segment — O(live corpus), amortized into the compaction.
     // Per-leg wall time is recorded in [[lastCompactSecs]] so operators
-    // (and the scale probe's all-legs compaction gate) can see where a
-    // slow compaction went.
+    // can see where a slow compaction went.
     val split = scala.collection.mutable.LinkedHashMap(
       "store" -> (System.nanoTime() - t0) / 1e9)
     def timed(leg: String)(f: => Unit): Unit = {
@@ -675,7 +674,8 @@ final class HybridStore(spark: SparkSession, root: String,
     // vectors (the reference's store round-trips nil sub-indexes,
     // hybrid_search_index_test.go:868-946)
     // the HNSW leg exposes its distance-eval counter through the handle
-    // (LocalHybrid.vecDistEvals) — the structural per-query work gate
+    // (LocalHybrid.vecDistEvals), a per-query work count that host load
+    // does not move
     var vecWork: () => Long = null
     val vecSearch:
         Option[(Array[Float], Int, Long => Boolean) => Seq[(Long, Double)]] =
@@ -748,11 +748,6 @@ final class HybridStore(spark: SparkSession, root: String,
 
   private[graft] def hnswLogLoaded: Boolean =
     mutex.synchronized { attached[HnswLog].exists(_.loadedFromArtifact) }
-
-  private[graft] def hnswAutoPersistSecs: Seq[Double] =
-    mutex.synchronized {
-      attached[HnswLog].map(_.autoPersistSecs).getOrElse(Vector.empty)
-    }
 
   /** True when this store's HNSW leg discarded a persisted artifact over
     * a metric mismatch and paid a full re-seed — a store-level signal

@@ -616,8 +616,8 @@ final class SegmentStore(spark: SparkSession, root: String,
     // (disjoint-from-superset ⇒ truly disjoint; the slack only costs an
     // occasional unpruned probe). Without this, the first post-compaction
     // mutation pays one id-column agg over the ENTIRE compacted corpus
-    // to backfill the range (caught by the HYBSTORE metered gate: a 10k
-    // append reading 10M rows). Only seeded when every source's range is
+    // to backfill the range (a 10k-row append once read every row of a
+    // compacted 10M-row store for it). Only seeded when every source's range is
     // cached and defined; otherwise the lazy one-agg backfill stands.
     val seeded: Option[(Long, Long)] = {
       val rs = sources.map(rangeCache.get)

@@ -85,11 +85,6 @@ final class HnswLog private (val metric: Metric)
       spark: org.apache.spark.sql.SparkSession, dir: String): Unit =
     autoPersist = Some((spark, dir))
 
-  /** Wall cost of each auto-persist fire (observability for the 1M
-    * HYBSTORE gate: the parquet dump is NEW I/O on the streaming path —
-    * the checkpoint it rides only materializes to block storage). */
-  private[graft] var autoPersistSecs: Vector[Double] = Vector.empty
-
   private def swap(next: Hnsw.Index): Unit =
     if (next ne idx) {
       val old = idx
@@ -100,11 +95,7 @@ final class HnswLog private (val metric: Metric)
         idx.graphs.localCheckpoint()
         idx.graphs.count()
         sinceCheckpoint = 0
-        autoPersist.foreach { case (s, d) =>
-          val t0 = System.nanoTime()
-          persistTo(s, d)
-          autoPersistSecs :+= (System.nanoTime() - t0) / 1e9
-        }
+        autoPersist.foreach { case (s, d) => persistTo(s, d) }
       }
       // drop the old generation's cache entries; shards shared into the
       // new generation stay resident under its own entries

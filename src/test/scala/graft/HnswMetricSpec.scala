@@ -171,7 +171,7 @@ class HnswMetricSpec extends SparkSpec {
        "(diverse neighbor selection keeps cluster exit edges)") {
     val s = spark
     import s.implicits._
-    // Spec-scale twin of ScaleProbe's SPARK_GRAFT_GEOM=hard generator:
+    // Adversarial geometry for graph search:
     // isotropic noise + planted clusters of 32 near-duplicates. Under
     // nearest-M neighbor selection every planted node's edge list fills
     // (and overflow-prunes) entirely INSIDE its cluster — the beam enters

@@ -867,8 +867,7 @@ class LogLifecycleSpec extends SparkSpec {
     assert(hs.search(queryVec = Some(qv)).count() > 0) // seed the pq log
     // 20 more disjoint-range appends -> a 21-segment history; every probe
     // must answer from the cached range stats with ZERO segment scans,
-    // and per-mutation cost must not grow with the segment count (the
-    // 100-segment version of this contract is gated at probe scale)
+    // and per-mutation cost must not grow with the segment count
     (0 until 20).foreach { i =>
       hs.append(rows((4L + i * 4L) until (8L + i * 4L)))
       assert(hs.livenessSegmentsProbed == 0L,

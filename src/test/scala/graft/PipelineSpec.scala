@@ -99,7 +99,6 @@ class PipelineSpec extends SparkSpec {
     // jaccard side: 12 docs share one boilerplate trigram (df 12 over
     // autoSaltDf=2) — AUTO must salt it; exact detection (fraction 1.0)
     // keeps the toy corpus deterministic, production keeps the 1% default
-    // (the ScaleProbe planted-skew gate runs THOSE defaults at 200k docs)
     val boiler = "terms of service apply here"
     val docs = (0L until 12L).map { i =>
       (i, s"$boiler tail$i only token one$i two$i three$i", "blk")

@@ -15,6 +15,9 @@ object TestSpark {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
       .config("spark.ui.enabled", "false")
+      // the store suites repeat more plan shapes than the default 100
+      // entries hold; evicted classes are recompiled by Janino
+      .config("spark.sql.codegen.cache.maxEntries", "2000")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s

@@ -131,8 +131,8 @@ class VectorIndexSpec extends SparkSpec {
 
   test("pq/ivfpq: high recall on PQ-faithful subspace geometry (regression " +
        "gate for the ADC/codebook path)") {
-    // Product-of-subspace-anchors data (ScaleProbe's GEOM=subspace, scaled
-    // down): each of 4 subspaces draws one of 32 anchors by murmur3 of
+    // Product-of-subspace-anchors data (the PQ-faithful geometry):
+    // each of 4 subspaces draws one of 32 anchors by murmur3 of
     // (id, subspace), plus small noise. The true top-k ranking is decided
     // by WHICH anchors rows share — exactly what ADC reconstructs — so a
     // correct PQ scores high recall HERE even though it legitimately floors

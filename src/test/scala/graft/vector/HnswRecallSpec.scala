@@ -7,8 +7,8 @@ package graft.vector
   * (the reference's, hnsw_index.go:637-656) wires every planted point
   * only to its own cluster, the beam can enter but never leave, and
   * recall FREEZES regardless of efSearch (measured 83.4% at 1M in round
-  * 6). This spec is the scaled-down (4k x 32-dim) twin of
-  * `SPARK_GRAFT_GEOM=hard` ScaleProbe: it must hold recall@100 >= 0.95
+  * 6). This spec runs that geometry at 4k x 32-dim: it must hold
+  * recall@100 >= 0.95
   * at ef=80 AND show ef actually buying recall (monotone
   * non-decreasing) — a revert to keep-nearest selection fails it. */
 class HnswRecallSpec extends graft.SparkSpec {
@@ -18,7 +18,7 @@ class HnswRecallSpec extends graft.SparkSpec {
   private val blockSize = 500 // 8 blocks; 64 planted near-dups per block
   private val k = 100
 
-  /** Same functional form as ScaleProbe's hard generator: planted rows of
+  /** The adversarial generator: planted rows of
     * a block share one isotropic anchor (amplitude 100) plus tiny
     * per-row noise (0.5); the rest are pure isotropic noise. */
   private def vec(id: Long): Array[Float] = {
@@ -46,7 +46,7 @@ class HnswRecallSpec extends graft.SparkSpec {
     var i = 0
     while (i < n) { g.add(i.toLong, vecs(i)); i += 1 }
 
-    // queries are the planted id ≡ 7 rows of each block (as in ScaleProbe)
+    // queries are the planted id ≡ 7 rows of each block
     val queries = (0 until n by blockSize).map(b => (b + 7).toLong)
     def truth(q: Long): Set[Long] = {
       val qv = vecs(q.toInt)
