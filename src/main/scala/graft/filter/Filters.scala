@@ -2,6 +2,7 @@ package graft.filter
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, BooleanType, NumericType, StringType, StructType}
 
 /** Metadata filter algebra.
   *
@@ -77,38 +78,87 @@ object Filters {
   private def lv(value: Any): Column = lit(value)
 
   /** Compile one filter to a Column predicate. */
-  def compile(f: Filter): Column = f match {
-    case Eq(c, v)         => col(c) === lv(v)
-    case Ne(c, v)         => col(c) =!= lv(v)
-    case Gt(c, v)         => col(c) > lv(v)
-    case Gte(c, v)        => col(c) >= lv(v)
-    case Lt(c, v)         => col(c) < lv(v)
-    case Lte(c, v)        => col(c) <= lv(v)
-    case Between(c, a, b) => col(c).between(lv(a), lv(b))
-    case In(c, vs)        => col(c).isin(vs: _*)
-    // comet's NotIn = allDocs ANDNOT union(values) — docs where the field is
-    // missing DO qualify (metadata_index.go:311-323). SQL NOT IN is
-    // null-rejecting, so add the isNull branch explicitly, and drop null
-    // values: a null in the list would make `isin` null on every row it
-    // does not match, and a null value's bitmap holds no doc.
-    case NotIn(c, vs)     =>
-      col(c).isNull || !col(c).isin(vs.filter(_ != null): _*)
-    case Exists(c)        => col(c).isNotNull
-    case NotExists(c)     => col(c).isNull
-    case AnyIn(c, vs)     => arrays_overlap(col(c), array(vs.map(lv): _*))
-    // complement semantics mirror NotIn: a missing list qualifies, and
-    // arrays_overlap is null-valued on a null array, so spell both branches
-    case NoneIn(c, vs)    =>
-      col(c).isNull || !arrays_overlap(col(c), array(vs.map(lv): _*))
-    case Not(inner)       => compileNot(inner)
+  def compile(f: Filter): Column = compile(f, NoSchema)
+
+  /** Compile one filter against the frame's `schema`: a comparison whose
+    * literal [[matchesLocal]] cannot compare with the field's values (a
+    * string against a numeric field, a number against a string field)
+    * compiles to the constant the local evaluator gives, with no cast —
+    * comet keeps strings and numbers in different indexes
+    * (metadata_index.go:135-164), so such a filter matches nothing and its
+    * complement everything. Fields the schema does not type as number,
+    * string or Boolean compile as [[compile]] does. */
+  def compile(f: Filter, schema: StructType): Column = {
+    // a non-null literal of another kind than the field's values
+    def off(c: String, v: Any): Boolean = v != null && {
+      val t = schema.fields.reverseIterator.find(_.name == c).map(_.dataType)
+      t.map(kindOf).exists(k => k >= 0 && k != kindOf(v))
+    }
+    def offList(c: String, v: Any): Boolean = v != null && {
+      val t = schema.fields.reverseIterator.find(_.name == c).map(_.dataType)
+      t.collect { case ArrayType(e, _) => kindOf(e) }
+        .exists(k => k >= 0 && k != kindOf(v))
+    }
+    f match {
+      case Eq(c, v) if off(c, v)  => lit(false)
+      case Ne(c, v) if off(c, v)  => lit(false)
+      case Gt(c, v) if off(c, v)  => lit(false)
+      case Gte(c, v) if off(c, v) => lit(false)
+      case Lt(c, v) if off(c, v)  => lit(false)
+      case Lte(c, v) if off(c, v) => lit(false)
+      case Between(c, a, b) if off(c, a) || off(c, b) => lit(false)
+      // an incomparable value matches no row: drop it from the list
+      case In(c, vs) if vs.exists(off(c, _)) =>
+        val keep = vs.filterNot(off(c, _))
+        if (keep.isEmpty) lit(false) else compile(In(c, keep), schema)
+      case NotIn(c, vs) if vs.exists(off(c, _)) =>
+        val keep = vs.filterNot(off(c, _))
+        if (keep.isEmpty) lit(true) else compile(NotIn(c, keep), schema)
+      case AnyIn(c, vs) if vs.exists(offList(c, _)) =>
+        val keep = vs.filterNot(offList(c, _))
+        if (keep.isEmpty) lit(false) else compile(AnyIn(c, keep), schema)
+      case NoneIn(c, vs) if vs.exists(offList(c, _)) =>
+        val keep = vs.filterNot(offList(c, _))
+        if (keep.isEmpty) lit(true) else compile(NoneIn(c, keep), schema)
+      case Eq(c, v)         => col(c) === lv(v)
+      case Ne(c, v)         => col(c) =!= lv(v)
+      case Gt(c, v)         => col(c) > lv(v)
+      case Gte(c, v)        => col(c) >= lv(v)
+      case Lt(c, v)         => col(c) < lv(v)
+      case Lte(c, v)        => col(c) <= lv(v)
+      case Between(c, a, b) => col(c).between(lv(a), lv(b))
+      case In(c, vs)        => col(c).isin(vs: _*)
+      // comet's NotIn = allDocs ANDNOT union(values) — docs where the field is
+      // missing DO qualify (metadata_index.go:311-323). SQL NOT IN is
+      // null-rejecting, so add the isNull branch explicitly, and drop null
+      // values: a null in the list would make `isin` null on every row it
+      // does not match, and a null value's bitmap holds no doc.
+      case NotIn(c, vs)     =>
+        col(c).isNull || !col(c).isin(vs.filter(_ != null): _*)
+      case Exists(c)        => col(c).isNotNull
+      case NotExists(c)     => col(c).isNull
+      case AnyIn(c, vs)     => arrays_overlap(col(c), array(vs.map(lv): _*))
+      // complement semantics mirror NotIn: a missing list qualifies, and
+      // arrays_overlap is null-valued on a null array, so spell both branches
+      case NoneIn(c, vs)    =>
+        col(c).isNull || !arrays_overlap(col(c), array(vs.map(lv): _*))
+      // NOT via comet's inversion table rather than Catalyst NOT — identical
+      // result, but keeps null semantics aligned with the bitmap complement
+      // (complement of a bitmap includes docs lacking the field)
+      case Not(b: Between)  => col(b.field).isNull || !compile(b, schema)
+      case Not(inner)       => compile(Filter.invert(inner), schema)
+    }
   }
 
-  /** NOT via comet's inversion table rather than Catalyst NOT — identical
-    * result, but keeps null semantics aligned with the bitmap complement
-    * (complement of a bitmap includes docs lacking the field). */
-  private def compileNot(f: Filter): Column = f match {
-    case Between(c, a, b) => col(c).isNull || !col(c).between(lv(a), lv(b))
-    case other            => compile(Filter.invert(other))
+  private val NoSchema = new StructType()
+
+  /** The kind [[cmp]] compares within: 0 numbers, 1 strings, 2 Booleans,
+    * -1 anything else (a Spark type or a literal). */
+  private def kindOf(x: Any): Int = x match {
+    case _: NumericType | _: java.lang.Number   => 0
+    case _: StringType | _: String              => 1
+    case BooleanType | _: java.lang.Boolean     => 2
+    case _                                      => -1
   }
 
   /** Numeric comparisons under comet's ×100 fixed-point quantization
@@ -139,8 +189,13 @@ object Filters {
     * metadata_index_search.go:193-250); within a group AND/OR by flag;
     * empty group = match-all. */
   def compileGroups(groups: Seq[FilterGroup]): Column =
+    compileGroups(groups, NoSchema)
+
+  /** [[compileGroups]] against the frame's `schema`, each filter compiled
+    * by the schema-aware [[compile]]. */
+  def compileGroups(groups: Seq[FilterGroup], schema: StructType): Column =
     groups.map { g =>
-      val cols = g.filters.map(compile)
+      val cols = g.filters.map(compile(_, schema))
       if (cols.isEmpty) lit(true)
       else if (g.and) cols.reduce(_ && _)
       else cols.reduce(_ || _)
@@ -153,7 +208,7 @@ object Filters {
     * returns a char or length difference. */
   private final val NoCmp = Int.MinValue
 
-  private def integral(v: Any): Boolean = v.isInstanceOf[java.lang.Long] ||
+  private[graft] def integral(v: Any): Boolean = v.isInstanceOf[java.lang.Long] ||
     v.isInstanceOf[java.lang.Integer] || v.isInstanceOf[java.lang.Short] ||
     v.isInstanceOf[java.lang.Byte]
 

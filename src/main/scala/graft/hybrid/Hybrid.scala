@@ -1,6 +1,6 @@
 package graft.hybrid
 
-import graft.filter.{FilterGroup, Filters}
+import graft.filter.{Filter, FilterGroup, Filters}
 import graft.fusion.Fusion
 import graft.text.{BM25, BM25Corpus}
 import graft.vector.{FlatKnn, Hnsw, IdSet, Ivf, IvfPq, Kmeans, Metric, Pq}
@@ -158,7 +158,8 @@ object Hybrid {
 
     val candidates =
       if (filters.isEmpty) None
-      else Some(meta.filter(Filters.compileGroups(filters)).select(col("id")))
+      else Some(meta.filter(Filters.compileGroups(filters, meta.schema))
+        .select(col("id")))
 
     // every leg feeds ScoreAgg.aggregate (a groupBy) and then a rank/top-k
     // re-sort, so the legs' own global output sort is pure waste — one
@@ -382,38 +383,30 @@ object Hybrid {
     * out. */
   private val MemoEntries = 64
 
-  /** One meta row as the `field => value` view the local filter evaluator
-    * reads; `row` moves it along the rows. Each field name resolves to its
-    * column once (a few names per filter), not once per row. Packed-meta
-    * handles (`rows == null`: id-only metadata held as one primitive
-    * column) synthesize the id field on demand — boxing only on this rare
-    * id-filter path. */
-  private final class RowView(ids: Array[Long], rows: Array[Array[Any]],
-                              fieldIdx: Map[String, Int]) extends (String => Any) {
-    var row = 0
-    private var names = new Array[String](4)
-    private var cols = new Array[Int](4)
-    private var n = 0
-
-    private def column(f: String): Int = {
-      var i = 0
-      while (i < n) { if (names(i) == f) return cols(i); i += 1 }
-      if (n == names.length) {
-        names = java.util.Arrays.copyOf(names, n * 2)
-        cols = java.util.Arrays.copyOf(cols, n * 2)
-      }
-      names(n) = f
-      cols(n) = fieldIdx.getOrElse(f, -1)
-      n += 1
-      cols(n - 1)
+  /** A filter list as a memo key. Literals compare by Java `equals`:
+    * Scala's `==` makes `1L` equal to `1.0` and `-0.0` to `0.0`, which
+    * [[Filters.matchesLocal]] tells apart (`Long.MaxValue - 1` is below
+    * the Long literal `Long.MaxValue` but equal to its Double). The hash is
+    * the list's own, which such lists share. */
+  private final class MemoKey(val groups: Seq[FilterGroup]) {
+    override def hashCode: Int = groups.##
+    override def equals(o: Any): Boolean = o match {
+      case k: MemoKey => MemoKey.same(groups, k.groups)
+      case _          => false
     }
+  }
 
-    def apply(f: String): Any =
-      if (rows == null) { if (f == "id") java.lang.Long.valueOf(ids(row)) else null }
-      else {
-        val c = column(f)
-        if (c < 0) null else rows(row)(c)
-      }
+  private object MemoKey {
+    def same(a: Any, b: Any): Boolean = (a, b) match {
+      case (x: Seq[_], y: Seq[_]) =>
+        x.length == y.length && x.lazyZip(y).forall(same)
+      case (x: Filter with Product, y: Filter with Product) =>
+        x.getClass == y.getClass &&
+        same(x.productIterator.toSeq, y.productIterator.toSeq)
+      case (x: FilterGroup, y: FilterGroup) =>
+        x.and == y.and && same(x.filters, y.filters)
+      case _ => java.util.Objects.equals(a, b)
+    }
   }
 
   /** Embedded serving for the FULL hybrid lifecycle — the reference's own
@@ -421,20 +414,20 @@ object Hybrid {
     * vector + text → fusion → top-k, hybrid_search_index.go:477-615) with
     * zero Spark jobs per query. Sub-indexes are the embedded serving
     * structures ([[FlatKnn.LocalFlat]], [[BM25.LocalBM25]]); the metadata
-    * filter runs the [[Filters.matchesLocal]] evaluator (spec-pinned equal
-    * to the compiled Column) over collected rows once per distinct filter
-    * (a least-recently-used memo of 64 filters keeps the result), and
-    * the candidate set is pushed into BOTH modalities as a scan predicate,
-    * the per-index document-filter composition. Results match [[search]]
-    * up to floating-point ulps in BM25 sums. */
+    * filter is answered from a [[MetaIndex]] of typed columns (value-sorted
+    * numbers, string postings) with the ids [[Filters.matchesGroups]]
+    * accepts (spec-pinned equal to the compiled Column), once per distinct
+    * filter (a least-recently-used memo of 64 filters keeps the result),
+    * and the candidate set is pushed into BOTH modalities as a scan
+    * predicate, the per-index document-filter composition. Results match
+    * [[search]] up to floating-point ulps in BM25 sums. */
   final class LocalHybrid private[hybrid] (
-      metaIds: Array[Long], metaRows: Array[Array[Any]],
-      fieldIdx: Map[String, Int],
+      meta: MetaIndex,
       vecSearch: Option[(Array[Float], Int, Long => Boolean) => Seq[(Long, Double)]],
       bm25: Option[BM25.LocalBM25], val cfg: Config,
       vecWork: () => Long = null) {
 
-    def size: Int = metaIds.length
+    def size: Int = meta.size
 
     /** Cumulative distance evaluations of the vector leg, when the leg
       * counts them (the HNSW serving path does; None otherwise) — the
@@ -445,19 +438,23 @@ object Hybrid {
     def vecDistEvals: Option[Long] = Option(vecWork).map(_())
 
     /** True when the handle holds metadata as ONE primitive long column
-      * (the id-only packed path, 8 B per doc) instead of a boxed row per
-      * doc — checked structurally, because JVM heap-delta measurements
-      * are GC-noise-bound at corpus scale. */
-    def packedMeta: Boolean = metaRows == null
+      * (the id-only packed path, 8 B per doc) because the frame has no
+      * metadata column besides `id` — checked structurally, because JVM
+      * heap-delta measurements are GC-noise-bound at corpus scale. */
+    def packedMeta: Boolean = meta.idOnly
+
+    /** The representation the metadata index gave `field` ("long",
+      * "double", "string" or "boxed"; doc on [[MetaIndex]]). */
+    private[graft] def metaKind(field: String): Option[String] = meta.kind(field)
 
     // Per-filter candidate memo: the reference's metadata index answers a
-    // filter from precomputed roaring bitmaps (metadata_index.go:579-698),
-    // not by rescanning every document per query — the embedded analog
-    // evaluates a DISTINCT filter once over the meta rows and memoizes the
-    // matching ids as an [[IdSet]] (one sorted primitive array,
-    // binary-search membership, no per-id boxing). Repeated filters — the
-    // serving-path norm — then cost one lookup instead of a full scan of
-    // the rows per search.
+    // filter from precomputed roaring bitmaps (metadata_index.go:579-698);
+    // the embedded analog answers a DISTINCT filter once from the
+    // [[MetaIndex]] — binary searches over value-sorted numeric columns,
+    // posting unions for strings, sorted merges across a group — and
+    // memoizes the matching ids as an [[IdSet]] (one sorted primitive
+    // array, binary-search membership, no per-id boxing). Repeated
+    // filters — the serving-path norm — then cost one lookup.
     //
     // The memo keeps the MemoEntries most recently used filters (an
     // access-ordered LinkedHashMap), so a repeating filter survives any run
@@ -465,9 +462,9 @@ object Hybrid {
     // distinct filters cannot grow driver memory.
     private val memoLock = new Object
     private val memo =
-      new java.util.LinkedHashMap[Seq[FilterGroup], Candidates](16, 0.75f, true) {
+      new java.util.LinkedHashMap[MemoKey, Candidates](16, 0.75f, true) {
         override def removeEldestEntry(
-            e: java.util.Map.Entry[Seq[FilterGroup], Candidates]): Boolean =
+            e: java.util.Map.Entry[MemoKey, Candidates]): Boolean =
           this.size > MemoEntries
       }
 
@@ -475,25 +472,16 @@ object Hybrid {
       * memo lock; threads reading the same entry meanwhile wait for that
       * one evaluation instead of repeating it. */
     private final class Candidates(filters: Seq[FilterGroup]) {
-      lazy val ids: IdSet = {
-        val get = new RowView(metaIds, metaRows, fieldIdx)
-        val b = new scala.collection.mutable.ArrayBuilder.ofLong
-        var i = 0
-        while (i < metaIds.length) {
-          get.row = i
-          if (Filters.matchesGroups(filters, get)) b += metaIds(i)
-          i += 1
-        }
-        IdSet(b.result())
-      }
+      lazy val ids: IdSet = meta.select(filters)
     }
 
     private def candidatesFor(filters: Seq[FilterGroup]): IdSet = {
+      val key = new MemoKey(filters)
       val entry = memoLock.synchronized {
-        var e = memo.get(filters)
+        var e = memo.get(key)
         if (e == null) {
           e = new Candidates(filters)
-          memo.put(filters, e)
+          memo.put(key, e)
         }
         e
       }
@@ -592,27 +580,15 @@ object Hybrid {
                  corpus: Option[BM25Corpus],
                  cfg: Config = Config(),
                  vecWork: () => Long = null): LocalHybrid = {
-    val schema = meta.schema
-    if (schema.fieldNames.toSeq == Seq("id")) {
-      // PACKED-META fast path: an id-only metadata frame (the vector-only
-      // ANN-serving deployment) collects as ONE primitive long column —
-      // ~80 MB at 10M docs — instead of 10M boxed Row objects (~1 GB of
-      // driver heap the handle would pin for ids the filters evaluator
-      // can synthesize on demand)
-      val ids = graft.vector.Packed.longs(meta.select(col("id")))
-      new LocalHybrid(ids, null, Map("id" -> 0),
-        vecSearch, corpus.map(BM25.serve), cfg, vecWork)
-    } else {
-      val rows = meta.collect()
-      val idIdx = schema.fieldIndex("id")
-      val metaIds = rows.map(_.get(idIdx) match {
-        case n: java.lang.Number => n.longValue()
-        case other => throw new IllegalArgumentException(s"non-numeric id $other")
-      })
-      new LocalHybrid(metaIds, rows.map(_.toSeq.toArray),
-        schema.fieldNames.zipWithIndex.toMap,
-        vecSearch, corpus.map(BM25.serve), cfg, vecWork)
-    }
+    val index =
+      if (meta.schema.fieldNames.toSeq == Seq("id"))
+        // PACKED-META fast path: an id-only metadata frame (the vector-only
+        // ANN-serving deployment) collects as ONE primitive long column —
+        // ~80 MB at 10M docs — instead of 10M boxed Row objects (~1 GB of
+        // driver heap the handle would pin)
+        MetaIndex.ofIds(graft.vector.Packed.longs(meta.select(col("id"))))
+      else MetaIndex(meta.schema, meta.collect())
+    new LocalHybrid(index, vecSearch, corpus.map(BM25.serve), cfg, vecWork)
   }
 
   // ------------------------------------------------ single-artifact persist

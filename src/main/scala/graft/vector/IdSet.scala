@@ -20,6 +20,12 @@ object IdSet {
   def apply(ids: Array[Long]): IdSet = {
     val a = ids.clone()
     java.util.Arrays.sort(a)
+    sorted(a)
+  }
+
+  /** The set of `ids`, already in ascending order and possibly with
+    * repeats; the array is taken, not copied. */
+  private[graft] def sorted(a: Array[Long]): IdSet = {
     var n = 0
     var i = 0
     while (i < a.length) {
