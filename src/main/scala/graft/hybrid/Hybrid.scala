@@ -438,9 +438,10 @@ object Hybrid {
     def vecDistEvals: Option[Long] = Option(vecWork).map(_())
 
     /** True when the handle holds metadata as ONE primitive long column
-      * (the id-only packed path, 8 B per doc) because the frame has no
-      * metadata column besides `id` — checked structurally, because JVM
-      * heap-delta measurements are GC-noise-bound at corpus scale. */
+      * (the id-only packed path, 8 B per doc plus a 4 B slot order)
+      * because the frame has no metadata column besides `id` — checked
+      * structurally, because JVM heap-delta measurements are
+      * GC-noise-bound at corpus scale. */
     def packedMeta: Boolean = meta.idOnly
 
     /** The representation the metadata index gave `field` ("long",
@@ -583,9 +584,10 @@ object Hybrid {
     val index =
       if (meta.schema.fieldNames.toSeq == Seq("id"))
         // PACKED-META fast path: an id-only metadata frame (the vector-only
-        // ANN-serving deployment) collects as ONE primitive long column —
-        // ~80 MB at 10M docs — instead of 10M boxed Row objects (~1 GB of
-        // driver heap the handle would pin)
+        // ANN-serving deployment) collects as ONE primitive long column,
+        // sorted in place, with its int slot order — ~120 MB at 10M docs —
+        // instead of 10M boxed Row objects (~1 GB of driver heap the handle
+        // would pin)
         MetaIndex.ofIds(graft.vector.Packed.longs(meta.select(col("id"))))
       else MetaIndex(meta.schema, meta.collect())
     new LocalHybrid(index, vecSearch, corpus.map(BM25.serve), cfg, vecWork)

@@ -124,11 +124,11 @@ private[graft] object MetaIndex {
 
   private val Empty = new Array[Int](0)
 
-  /** An id-only index: the ids are the one column, held once. */
+  /** An id-only index: the ids are the one column, held once. Takes
+    * `ids` and sorts it in place. */
   def ofIds(ids: Array[Long]): MetaIndex = {
-    val sorted = ids.clone()
-    java.util.Arrays.sort(sorted)
-    new MetaIndex(sorted, Map("id" -> new Longs(sorted, null)))
+    java.util.Arrays.sort(ids)
+    new MetaIndex(ids, Map("id" -> new Longs(ids, Array.range(0, ids.length))))
   }
 
   /** The index of `rows` under `schema`, which must have a numeric `id`
@@ -152,29 +152,24 @@ private[graft] object MetaIndex {
           val v = Array.tabulate(n)(p => if (value(p) == null) 0L
             else value(p).asInstanceOf[java.lang.Number].longValue())
           val order = present.sortBy(v(_))
-          new Longs(order.map(v), identityOrNull(order, n))
+          new Longs(order.map(v), order)
         case FloatType | DoubleType =>
           val v = Array.tabulate(n)(p => if (value(p) == null) 0.0
             else value(p).asInstanceOf[java.lang.Number].doubleValue())
           val order = present.sortBy(v(_))(Ordering.Double.TotalOrdering)
-          new Doubles(order.map(v), identityOrNull(order, n))
+          new Doubles(order.map(v), order)
         case _: StringType =>
           val order = present.sortBy(value(_).asInstanceOf[String])
           val words = order.map(value(_).asInstanceOf[String])
           // one dictionary entry per run of equal words
           val firsts = words.indices.filter(i => i == 0 || words(i) != words(i - 1))
           new Strings(firsts.map(words).toArray, (firsts :+ words.length).toArray,
-            identityOrNull(order, n))
+            order)
         case _ => new Boxed(Array.tabulate(n)(value))
       })
     }.toMap
     new MetaIndex(byId.map(rawIds), columns)
   }
-
-  /** `order`, or null when it is `0 until n`. */
-  private def identityOrNull(order: Array[Int], n: Int): Array[Int] =
-    if (order.length == n && order.indices.forall(i => order(i) == i)) null
-    else order
 
   private[hybrid] sealed abstract class Column { def kind: String }
 
@@ -184,7 +179,7 @@ private[graft] object MetaIndex {
 
   /** A column whose non-null values are held in ascending order. Slot `s`
     * holds the `s`-th smallest value; `order(s)` is its row position (ties
-    * in row order), and a null `order` means slot `s` is row `s`. */
+    * in row order). */
   private sealed abstract class Sorted(val order: Array[Int]) extends Column {
     /** Non-null rows. */
     def count: Int
@@ -246,61 +241,31 @@ private[graft] object MetaIndex {
   }
 
   /** The row positions (ascending, distinct) at the slots of `ranges`,
-    * `(from, until)` pairs over `order` (null: slot = position), among `n`
-    * rows. A few positions are sorted; more are set in a bitmap of the
-    * rows and read back in order. */
+    * `(from, until)` pairs over `order`, among `n` rows: each is set in a
+    * bitmap of the rows, which is read back in order. */
   private def gather(order: Array[Int], ranges: Array[Int], n: Int): Array[Int] = {
-    def pos(s: Int): Int = if (order == null) s else order(s)
-    var m = 0
+    val bits = new Array[Long]((n + 63) >>> 6)
     var i = 0
-    while (i < ranges.length) { m += math.max(0, ranges(i + 1) - ranges(i)); i += 2 }
-    if (m == 0) Empty
-    else if (m < (n >>> 6)) {
-      val out = new Array[Int](m)
-      var k = 0
-      i = 0
-      while (i < ranges.length) {
-        var s = ranges(i)
-        while (s < ranges(i + 1)) { out(k) = pos(s); k += 1; s += 1 }
-        i += 2
-      }
-      java.util.Arrays.sort(out)
-      distinct(out)
-    } else {
-      val bits = new Array[Long]((n + 63) >>> 6)
-      i = 0
-      while (i < ranges.length) {
-        var s = ranges(i)
-        while (s < ranges(i + 1)) { val p = pos(s); bits(p >>> 6) |= 1L << p; s += 1 }
-        i += 2
-      }
-      var count = 0
-      bits.foreach(w => count += java.lang.Long.bitCount(w))
-      val out = new Array[Int](count)
-      var k = 0
-      var w = 0
-      while (w < bits.length) {
-        var x = bits(w)
-        while (x != 0) {
-          out(k) = (w << 6) + java.lang.Long.numberOfTrailingZeros(x)
-          k += 1
-          x &= x - 1
-        }
-        w += 1
-      }
-      out
+    while (i < ranges.length) {
+      var s = ranges(i)
+      while (s < ranges(i + 1)) { val p = order(s); bits(p >>> 6) |= 1L << p; s += 1 }
+      i += 2
     }
-  }
-
-  /** `a` (ascending) without repeats. */
-  private def distinct(a: Array[Int]): Array[Int] = {
-    var n = 0
-    var i = 0
-    while (i < a.length) {
-      if (n == 0 || a(i) != a(n - 1)) { a(n) = a(i); n += 1 }
-      i += 1
+    var count = 0
+    bits.foreach(w => count += java.lang.Long.bitCount(w))
+    val out = new Array[Int](count)
+    var k = 0
+    var w = 0
+    while (w < bits.length) {
+      var x = bits(w)
+      while (x != 0) {
+        out(k) = (w << 6) + java.lang.Long.numberOfTrailingZeros(x)
+        k += 1
+        x &= x - 1
+      }
+      w += 1
     }
-    if (n == a.length) a else java.util.Arrays.copyOf(a, n)
+    out
   }
 
   /** Positions in `[0, n)` missing from `a` (ascending, distinct). */

@@ -17,6 +17,14 @@ Serve.scala), and query `j` of that stream has kind `QueryKinds(j % 6)`
 (`Gen.queries` and `Gen.QueryKinds` in
 perfbench/src/main/scala/perfbench/Gen.scala). 20,000 is not a multiple of
 6, so a plain `i % 6` would mislabel every request after the first wrap.
+
+Those two constants are copied from perfbench, so the script checks them on
+every run: a query of each kind calls exactly the legs its parts name
+(`Serve.Legs.probe`: `vector.serve` for a vector, `text.serve` for a text,
+`filter.serve` for a filter), and a request whose leg spans differ from its
+kind's stops the script with an error instead of being counted under the
+wrong kind. Every shift of the kind cycle puts some kind on a request with
+other legs, so a stale kind list or stream length fails at once.
 """
 import json
 import statistics
@@ -28,6 +36,16 @@ QUERY_KINDS = ["vector", "text", "hybrid", "hybrid_cat", "hybrid_price",
 # perfbench/src/main/scala/perfbench/Serve.scala, ctx.gen.queries("serve-queries", 20000)
 STREAM = 20000
 SPANS = ["hybrid.serve", "vector.serve", "text.serve", "filter.serve"]
+# the leg spans each kind's query calls (Gen.queries gives each kind its
+# vector, text and filter parts)
+LEGS = {
+    "vector": {"vector.serve"},
+    "text": {"text.serve"},
+    "hybrid": {"vector.serve", "text.serve"},
+    "hybrid_cat": {"vector.serve", "text.serve", "filter.serve"},
+    "hybrid_price": {"vector.serve", "text.serve", "filter.serve"},
+    "vector_cat": {"vector.serve", "filter.serve"},
+}
 
 
 def kind_of(request):
@@ -48,6 +66,14 @@ def medians(path):
             t = (s["end_ns"] - s["start_ns"]) / 1e6
             ms.setdefault((kind_of(s["request"]), s["name"]), []).append(t)
             per_request.setdefault(s["request"], {})[s["name"]] = t
+    for req, spans in per_request.items():
+        if "hybrid.serve" not in spans:
+            continue
+        legs = set(spans) - {"hybrid.serve"}
+        if legs != LEGS[kind_of(req)]:
+            sys.exit("%s: request %d, labelled %s, ran legs %s: the kind list "
+                     "or stream length no longer matches perfbench"
+                     % (path, req, kind_of(req), sorted(legs)))
     fusion = {}
     for req, spans in per_request.items():
         if all(n in spans for n in ("hybrid.serve", "vector.serve", "text.serve")):
